@@ -11,6 +11,11 @@ Training-data additions (per build brief): quality scoring, token
 counting, rolling-hash document fingerprinting.  All built-in column
 algebra where possible; NFD strip is a pandas UDF (Spark has no builtin
 Unicode-decomposition strip).
+
+Tokenizer contract: every tokenizing operator uses tokens() (whitespace
+runs split, optionally lowercased) or alnum_tokens() (lowercased,
+non-[a-z0-9] runs split — the rule the DuckDB oracles mirror).  Neither
+yields an empty token: a blank doc is [], NULL stays NULL.
 """
 
 from __future__ import annotations
@@ -23,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 __all__ = [
+    "tokens",
+    "alnum_tokens",
     "remove_accents",
     "remove_accents_udf",
     "lang_id_expr",
@@ -42,6 +49,18 @@ __all__ = [
     "char_entropy",
     "frequent_ngrams",
 ]
+
+
+def tokens(col, lower: bool = True) -> Column:
+    """Tokens between runs of space/tab/newline/CR/VT/FF; no empties."""
+    return F.array_remove(F.split(F.lower(col) if lower else col, r"\s+"), "")
+
+
+def alnum_tokens(col) -> Column:
+    """Lowercased [a-z0-9] tokens: the LM/classifier/DSIR/caption/FTS
+    rule, which every oracle's string_split_regex CTE must match."""
+    return F.array_remove(F.split(F.lower(col), "[^a-z0-9]+"), "")
+
 
 # Tiny deterministic stopword lists for the lang-ID heuristic.  Scoring is
 # pure column algebra: count of language-marker words per language, argmax.
@@ -98,7 +117,7 @@ def quality_score_expr(text_col: Column) -> Column:
     n = F.length(text_col).cast("double")
     alpha = F.length(F.regexp_replace(text_col, r"[^\p{L}]", "")).cast("double")
     punct = F.length(F.regexp_replace(text_col, r"[^.,;:!?]", "")).cast("double")
-    words = F.size(F.split(F.trim(text_col), r"\s+")).cast("double")
+    words = F.size(tokens(text_col, lower=False)).cast("double")
     mean_wlen = F.when(words > 0, n / words).otherwise(F.lit(0.0))
     len_score = F.least(n / F.lit(500.0), F.lit(1.0))
     alpha_score = F.when(n > 0, alpha / n).otherwise(F.lit(0.0))
@@ -111,9 +130,7 @@ def quality_score_expr(text_col: Column) -> Column:
 
 def token_count_expr(text_col: Column) -> Column:
     """Whitespace token count."""
-    return F.when(F.length(F.trim(text_col)) == 0, F.lit(0)).otherwise(
-        F.size(F.split(F.trim(text_col), r"\s+"))
-    )
+    return F.size(tokens(text_col, lower=False))
 
 
 def bpe_ish_token_count_expr(text_col: Column) -> Column:
@@ -137,7 +154,7 @@ def gopher_quality_flags(text_col: Column) -> list[Column]:
     Each rule is one codegen'd expression over the text column — the
     whole filter is a projection, no shuffle, no UDF.
     """
-    words = F.array_remove(F.split(F.trim(text_col), r"\s+"), "")
+    words = tokens(text_col, lower=False)
     n_words = F.size(words)
     chars = F.length(F.concat_ws("", words)).cast("double")
     mean_wlen = F.when(n_words > 0, chars / n_words).otherwise(F.lit(0.0))
@@ -207,7 +224,7 @@ def gopher_repetition(df, id_col: str = "doc_id", text_col: str = "text"):
     size — then ONE hash aggregation keyed by (doc, n, gram) with
     map-side combine and ONE conditional re-aggregation keyed by doc.
     All JVM; no UDF, no window, no driver loop."""
-    w = F.array_remove(F.split(F.trim(F.col(text_col)), r"\s+"), "")
+    w = tokens(F.col(text_col), lower=False)
     lines = F.filter(
         F.split(F.col(text_col), "\n"), lambda l: F.trim(l) != F.lit("")
     )
@@ -351,13 +368,15 @@ def pii_scrub(df, id_col: str = "doc_id", text_col: str = "text"):
 
 
 def word_ngrams(toks, n: int, short_doc_whole: bool = True):
-    """Overlapping word n-grams of a whitespace-token array as ONE
-    compiled-regex pass over the single-space join: a zero-width
-    lookahead anchored at token starts captures the next n tokens, so
-    regexp_extract_all yields exactly the transform/slice/concat_ws
-    HOF's gram sequence (proven element-identical, incl. adversarial
-    tokens) — but whole-stage-codegen'd instead of interpreted per
-    gram (CLAUDE.md HOF rule; measured ~2× on 50k-doc gram builds).
+    """Overlapping word n-grams of a token array as ONE compiled-regex
+    pass over the single-space join: a zero-width lookahead anchored at
+    token starts captures the next n tokens — whole-stage-codegen'd
+    instead of a transform/slice/concat_ws HOF interpreted per gram
+    (CLAUDE.md HOF rule; measured ~2× on 50k-doc gram builds).
+
+    Input contract: a tokens()/alnum_tokens() array (no empty token),
+    so the join splits back into the same tokens and gram i starts at
+    token i — the position dedup_substring maps back to.
 
     short_doc_whole: a doc with fewer than n tokens contributes its
     whole token sequence as one gram (the dedup shingle rule); False →
@@ -372,18 +391,6 @@ def word_ngrams(toks, n: int, short_doc_whole: bool = True):
             F.regexp_extract_all(joined, F.lit(pat), F.lit(1))
         )
     )
-
-
-def _lm_tokens(text_col: str):
-    """The shared LM/classifier tokenization rule: lowercase, split on
-    non-alphanumerics, drop empties.  This expression is the CONTRACT
-    with every DuckDB oracle's string_split_regex CTE — unigram_logprob,
-    bigram_logprob and hashed_classifier_score must all tokenize
-    identically or their scores silently desynchronize."""
-    # array_remove(…, '') is the codegen'd equivalent of the old
-    # filter(t -> t != '') HOF (interpreted per element) — identical
-    # tokens, same oracle contract
-    return F.array_remove(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), "")
 
 
 def unigram_logprob(
@@ -413,7 +420,7 @@ def unigram_logprob(
     BROADCAST into the scoring join, then ONE per-doc aggregation.
     No UDF, no driver loop; the only all-reduce objects are the
     bounded vocab and a scalar."""
-    toks = _lm_tokens(text_col)
+    toks = alnum_tokens(text_col)
     tok_rows = df.select(F.col(id_col), F.explode(toks).alias("tok"))
     counts = tok_rows.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     total = counts.agg(F.sum("cnt").alias("_total"))
@@ -461,7 +468,7 @@ def hashed_classifier_score(
     100 TB shape: ONE token explode, a BROADCAST join against the
     bounded weights table, ONE per-doc aggregation — no UDF, no
     unbounded shuffle."""
-    toks = _lm_tokens(text_col)
+    toks = alnum_tokens(text_col)
     tok_rows = df.select(F.col(id_col), F.explode(toks).alias("tok"))
     bucket = F.pmod(F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long"), F.lit(n_buckets))
     scored = tok_rows.withColumn("bucket", bucket).join(
@@ -531,7 +538,7 @@ def bigram_logprob(
     small).  The thin (id, w1, w2) pair stream is localCheckpointed so
     tokenization runs once for the bigram side (the unigram side scans
     ALL docs, including the short ones the pair stream drops)."""
-    toks = _lm_tokens(text_col)
+    toks = alnum_tokens(text_col)
     staged = df.select(F.col(id_col), toks.alias("_toks")).filter(F.size("_toks") >= 2)
     n = F.size("_toks")
     pairs = staged.select(
@@ -643,10 +650,7 @@ def c4_clean(
         F.filter(
             F.col("_lines"),
             lambda l: l.rlike(_C4_TERMINAL_RE)
-            & (
-                F.size(F.filter(F.split(l, r"\s+"), lambda x: x != F.lit("")))
-                >= _C4_MIN_WORDS_PER_LINE
-            )
+            & (F.size(tokens(l, lower=False)) >= _C4_MIN_WORDS_PER_LINE)
             & ~F.lower(l).contains("javascript"),
         ).alias("_kept"),
     )
@@ -1004,7 +1008,7 @@ def frequent_ngrams(
     materialization)."""
     toks = df.select(
         F.col(id_col).alias("_id"),
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("toks"),
+        tokens(F.col(text_col)).alias("toks"),
     )
     grams = toks.select(
         "_id",

@@ -27,7 +27,7 @@ CLIP-scored pipeline runs at 100 TB:
     codegen, no UDF, no join (metadata rides in the single groupBy's
     key).
 
-Tokenization is the shared `_lm_tokens` contract (functions/text.py:349)
+Tokenization is the shared `alnum_tokens` contract (functions/text.py)
 so the DuckDB oracle recomputes the identical vectors.
 """
 
@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sosse_spark.functions.text import _lm_tokens
+from sosse_spark.functions.text import alnum_tokens
 
 __all__ = [
     "image_vec_from_phash",
@@ -117,7 +117,7 @@ def curate_image_captions(
     combinable, empty captions keep their row via the outer explode ->
     pure fixed-width column algebra.  ONE Exchange total, zero joins,
     zero Python."""
-    toks = _lm_tokens(caption_col)
+    toks = alnum_tokens(caption_col)
     staged = images.select(
         F.col(id_col),
         F.col("w"),
@@ -516,7 +516,7 @@ def vlm_token_plan(
     an HxW image becomes (H/P)·(W/P) patch tokens; ceil on each axis for
     non-divisible crops) applied to the BUCKET resolution — the actual
     training-sample shape after cover-resize + center-crop — and caption
-    tokens follow the shared `_lm_tokens` contract (functions/text.py)
+    tokens follow the shared `alnum_tokens` contract (functions/text.py)
     so the oracle recomputes them identically.  LLaVA-style training
     concatenates image patch tokens + text tokens, plus `extra_tokens`
     separators/specials.
@@ -539,7 +539,7 @@ def vlm_token_plan(
         "bucket_w",
         "bucket_h",
         img_t.alias("img_tokens"),
-        F.size(_lm_tokens(caption_col)).alias("txt_tokens"),
+        F.size(alnum_tokens(caption_col)).alias("txt_tokens"),
     )
     return staged.withColumn(
         "total_tokens",

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from sosse_spark.functions.text import word_ngrams
+from sosse_spark.functions.text import tokens, word_ngrams
 
 __all__ = [
     "decontaminate",
@@ -67,7 +67,7 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str, no_numbers: bool = Fa
 
 def shingles(text_col: str, k: int = 5) -> F.Column:
     """Word k-shingles as an array column (lowercased, whitespace split)."""
-    return word_ngrams(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), k)
+    return word_ngrams(tokens(F.col(text_col)), k)
 
 
 def minhash_signature(shingle_col: F.Column, num_hashes: int = 32) -> F.Column:
@@ -109,7 +109,7 @@ def minhash_lsh_pairs(
     # free when the DataFrame goes out of scope, unlike persist()).
     toks = df.select(
         F.col(id_col).alias("_id"),
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("toks"),
+        tokens(F.col(text_col)).alias("toks"),
     )
     sh_df = toks.select(
         "_id",
@@ -198,9 +198,11 @@ def simhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     the signature with literal shift positions — fully codegen'd, and
     the explode+agg shape map-side combines (partial aggregation) so the
     shuffle carries one 64-vote row per document, not per token."""
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok"),
+    # a blank doc votes as ONE empty token, so blank docs pair with each
+    # other exactly as they do under minhash / ngram_jaccard's [''] gram
+    blank_as_one = F.when(F.size("_t") == 0, F.array(F.lit(""))).otherwise(F.col("_t"))
+    toks = df.select(F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_t")).select(
+        "_id", F.explode(blank_as_one).alias("tok")
     )
     # Two integer-exact reductions instead of one wide one: (1) collapse
     # to per-(doc, distinct-token) counts first (map-side combinable, so
@@ -489,14 +491,14 @@ def ngram_jaccard_pairs(
     # re-eval per shingle element)
     toks_df = df.select(
         F.col(id_col).alias("_id"),
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("toks"),
+        tokens(F.col(text_col)).alias("toks"),
     )
     grams = toks_df.select(
         "_id",
         F.array_distinct(word_ngrams(F.col("toks"), n)).alias("g"),
         F.concat_ws(
             "|",
-            F.col("toks").getItem(0),
+            F.get("toks", 0),
             (F.size("toks") / len_band).cast("int").cast("string"),
         ).alias("blk"),
     ).withColumn("gs", F.size("g"))
@@ -567,7 +569,7 @@ def ngram_jaccard_bruteforce(
         )
     toks_df = df.select(
         F.col(id_col).alias("_id"),
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("toks"),
+        tokens(F.col(text_col)).alias("toks"),
     )
     grams = toks_df.select(
         "_id",
@@ -747,16 +749,7 @@ def dedup_substring(
         raise ValueError(f"unknown policy: {policy}")
     toked = docs.select(
         F.col(id_col).alias("_id"),
-        F.split(F.trim(F.col(text_col)), r"\s+").alias("toks"),
-    ).select(
-        "_id",
-        # split('') -> [''] — normalize blank docs to a true empty array
-        F.when(
-            (F.size("toks") == 1) & (F.element_at("toks", 1) == ""),
-            F.array().cast("array<string>"),
-        )
-        .otherwise(F.col("toks"))
-        .alias("toks"),
+        tokens(F.col(text_col), lower=False).alias("toks"),
     )
     # one compiled-regex gram pass (word_ngrams, full windows only) with
     # the md5 OUTSIDE the generator — evaluated per exploded row under
@@ -782,8 +775,8 @@ def dedup_substring(
     covered = dup_wins.select(
         "_id", F.explode(F.sequence(F.col("wpos"), F.col("wpos") + (k - 1))).alias("pos")
     ).distinct()
-    tokens = toked.select("_id", F.posexplode("toks").alias("pos", "tok"))
-    survivors = tokens.join(covered, ["_id", "pos"], "left_anti")
+    tok_rows = toked.select("_id", F.posexplode("toks").alias("pos", "tok"))
+    survivors = tok_rows.join(covered, ["_id", "pos"], "left_anti")
     reassembled = survivors.groupBy("_id").agg(
         F.array_join(
             F.transform(F.array_sort(F.collect_list(F.struct("pos", "tok"))), lambda x: x["tok"]),

@@ -40,6 +40,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sosse_spark.functions.text import alnum_tokens
+
 __all__ = [
     "fts_bm25_rank",
     "WebsearchGroup",
@@ -146,12 +148,8 @@ def parse_websearch(query: str) -> list[WebsearchGroup]:
     ]
 
 
-def fts_tokens(text_col: Column) -> Column:
-    """Lowercased alnum token array (the tsvector-lexeme analog, before
-    folding).  array_remove(…, '') is the codegen'd equivalent of the
-    old filter(t -> t != '') HOF — Spark runs HOF lambdas interpreted
-    per element, and this expression sits on every FTS corpus scan."""
-    return F.array_remove(F.split(F.lower(text_col), "[^a-z0-9]+"), "")
+# the tsvector-lexeme analog, before folding: the shared alnum rule
+fts_tokens = alnum_tokens
 
 
 def fts_fold(tokens: Column) -> Column:

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sosse_spark.functions.text import alnum_tokens, tokens, word_ngrams
+
 __all__ = [
     "deterministic_uniform",
     "stratified_sample",
@@ -132,8 +134,8 @@ def chunk_documents(
     if overlap >= max_tokens:
         raise ValueError(f"overlap={overlap} must be smaller than max_tokens={max_tokens}")
     stride = max_tokens - overlap
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    n = F.when(F.length(F.trim(F.col(text_col))) == 0, F.lit(0)).otherwise(F.size(toks))
+    toks = tokens(F.col(text_col), lower=False)
+    n = F.size(toks)
     n_chunks = F.floor((F.greatest(n - overlap, F.lit(1)) + stride - 1) / stride).cast("int")
     staged = docs.select(
         F.col(id_col), toks.alias("_toks"), n.alias("_n"), n_chunks.alias("_k")
@@ -223,16 +225,12 @@ def _hashed_ngram_rows(
 ) -> DataFrame:
     """(id, bucket) rows with multiplicity: DSIR's hashed n-gram features
     (Xie et al. 2023, arXiv:2302.03169 §3.1 — unigrams + bigrams hashed
-    into a fixed bucket table).  Tokenization is the shared _lm_tokens
-    contract; the bucket is the md5-derived integer every oracle can
-    recompute.  One staged projection (the _toks column is referenced
-    three times so CollapseProject keeps the stage — CLAUDE.md HOF
-    rule), one explode."""
-    from sosse_spark.functions.text import _lm_tokens
-
-    from sosse_spark.functions.text import word_ngrams
-
-    staged = docs.select(F.col(id_col), _lm_tokens(text_col).alias("_toks"))
+    into a fixed bucket table).  Tokenization is the shared alnum_tokens
+    contract (functions/text.py); the bucket is the md5-derived integer
+    every oracle can recompute.  One staged projection (the _toks column
+    is referenced three times so CollapseProject keeps the stage —
+    CLAUDE.md HOF rule), one explode."""
+    staged = docs.select(F.col(id_col), alnum_tokens(text_col).alias("_toks"))
     # full-window bigrams via the shared compiled-regex gram pass (the
     # zip_with/slice HOF ran interpreted per element); identical strings
     bigrams = word_ngrams(F.col("_toks"), 2, short_doc_whole=False)

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sosse_spark.functions.text import tokens
+
 __all__ = [
     "filter_predicate",
     "multi_field_or",
@@ -280,22 +282,19 @@ def _template_search_url(template: Column, terms: Column) -> Column:
                                     of the substituted value when the
                                     placeholder is the whole value
 
-    quote_plus is exact here for the two alphabets that reach it: the
-    terms corpus is alnum + space + the shortcut chars '!'/'+' (an
-    unresolved shortcut word stays in the terms, se/models.py:357-358),
-    covered by the escape chain ! → %21, + → %2B, space → '+'; base64
-    output is fully covered by + → %2B, / → %2F, = → %3D."""
-    qp = F.replace(
-        F.replace(F.replace(terms, F.lit("!"), F.lit("%21")), F.lit("+"), F.lit("%2B")),
-        F.lit(" "),
-        F.lit("+"),
-    )
+    quote_plus is exact for any string: url_encode (Java URLEncoder,
+    UTF-8, uppercase hex, space → '+') differs from Python's quote_plus
+    only on '*' (left raw) and '~' (escaped), both undone here — the
+    default arm passes the RAW query, tabs and newlines included."""
+
+    def quote_plus(c):
+        return F.replace(
+            F.replace(F.url_encode(c), F.lit("*"), F.lit("%2A")), F.lit("%7E"), F.lit("~")
+        )
+
+    qp = quote_plus(terms)
     b64 = F.base64(F.encode(terms, "UTF-8"))
-    b64_qp = F.replace(
-        F.replace(F.replace(b64, F.lit("+"), F.lit("%2B")), F.lit("/"), F.lit("%2F")),
-        F.lit("="),
-        F.lit("%3D"),
-    )
+    b64_qp = quote_plus(b64)
     plain = F.lit("{searchTerms}")
     b64ph = F.lit("{searchTermsBase64}")
     ppos = F.locate("{searchTerms}", template)
@@ -356,9 +355,9 @@ def search_redirect(
     Query text must be unique per row (it is the join-back key)."""
     en = F.broadcast(engines.filter(F.col("enabled")))
     q = F.col(query_col)
-    words = queries.select(
-        q, F.split(F.trim(q), r"\s+").alias("_words")
-    ).filter(F.trim(q) != "")
+    words = queries.select(q, tokens(q, lower=False).alias("_words")).filter(
+        F.size("_words") > 0
+    )
     exploded = words.select(
         q, "_words", F.posexplode("_words").alias("_pos", "_w")
     ).filter(F.col("_w").startswith(shortcut_char))

@@ -408,7 +408,7 @@ def ivf_topk(
         .select(
             query_id_col,
             id_col,
-F.round(cosine_sim(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
+            F.round(cosine_sim(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
         )
     )
     w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
@@ -488,11 +488,13 @@ def _blocked_exact_candidates(
             c = va_ @ vb_.T
             ia, ib = np.nonzero(c >= cut)
             id_a, id_b = ids_a[ia], ids_b[ib]
-        lo = np.minimum(id_a, id_b)
-        hi = np.maximum(id_a, id_b)
+        swap = id_b < id_a  # np.minimum rejects object (string) ids
+        lo = np.where(swap, id_b, id_a)
+        hi = np.where(swap, id_a, id_b)
         return pd.DataFrame({"id_a": lo, "id_b": hi})
 
-    return rep.groupBy("_ci", "_cj").applyInPandas(_pairs, "id_a long, id_b long")
+    t = df.schema[id_col].dataType.simpleString()
+    return rep.groupBy("_ci", "_cj").applyInPandas(_pairs, f"id_a {t}, id_b {t}")
 
 
 def embedding_near_dup_pairs(
@@ -628,7 +630,7 @@ def semantic_dedup(
         .select(
             "id_a",
             "id_b",
-F.round(cosine_sim(F.col("_va"), F.col("_vb")), 6).alias("cs"),
+            F.round(cosine_sim(F.col("_va"), F.col("_vb")), 6).alias("cs"),
         )
         .filter(F.col("cs") >= threshold)
         .groupBy("id_b")

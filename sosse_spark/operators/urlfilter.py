@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sosse_spark.functions.text import alnum_tokens
+
 _HOST_RE = "^[a-z][a-z0-9+.-]*://([^/?#:]+)"
 
 
@@ -78,9 +80,7 @@ def url_quality_filter(
     else:
         hard_hit = F.lit(False)
     if soft_words:
-        url_words = F.array_distinct(
-            F.array_remove(F.split(low, "[^a-z0-9]+"), "")
-        )
+        url_words = F.array_distinct(alnum_tokens(F.col(url_col)))
         soft_arr = F.array(*[F.lit(w.lower()) for w in sorted(set(soft_words))])
         soft_count = F.size(F.array_intersect(soft_arr, url_words))
     else:

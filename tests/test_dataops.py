@@ -177,6 +177,35 @@ def test_embedding_near_dup_recall_vs_bruteforce(spark):
     assert len(got & truth) / max(len(truth), 1) >= 0.9
 
 
+def test_embedding_near_dup_low_threshold_string_ids(spark):
+    """The low-threshold blocked-BLAS path keeps the id column's type:
+    string ids pair exactly as their long twins, ordered id_a < id_b by
+    STRING comparison ('10' < '9')."""
+    from sosse_spark.operators.similarity import embedding_near_dup_pairs
+
+    n, dim = 40, 8
+    rng = np.random.RandomState(7)
+    base = rng.randn(n, dim)
+    norms = np.linalg.norm(base, axis=1, keepdims=True)
+    cos = (base / norms) @ (base / norms).T
+    truth = {
+        (min(str(i), str(j)), max(str(i), str(j)))
+        for i in range(n)
+        for j in range(i + 1, n)
+        if round(cos[i, j], 6) >= 0.5
+    }
+    emb = spark.createDataFrame(
+        [(str(i), [float(x) for x in base[i]]) for i in range(n)],
+        "vec_id string, embedding array<double>",
+    )
+    out = embedding_near_dup_pairs(
+        emb, threshold=0.5, rows_per_band=8, target_recall=0.995, dim=dim
+    )
+    assert dict(out.dtypes)["id_a"] == "string"
+    got = {(r["id_a"], r["id_b"]) for r in out.collect()}
+    assert truth and got == truth
+
+
 def test_simhash_equals_bruteforce_at_large_hamming(spark, docs):
     """Pigeonhole contract: with chunks derived from max_hamming, the
     bucketed operator must EQUAL brute-force hamming pairs for ANY h —

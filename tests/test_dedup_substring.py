@@ -83,6 +83,16 @@ def test_hand_golden_cross_doc_cut(spark):
     assert got[6][2] == 0
 
 
+def test_edge_newline_does_not_shift_positions(spark):
+    # a doc starting with '\n' must tokenize like one starting with a
+    # space: the shared 'one two three' is cut, 'zzz' survives
+    texts = {1: "one two three four", 2: "\nzzz one two three"}
+    got = _run(spark, texts, 3)
+    assert got[1] == ("four", 1, 3)
+    assert got[2] == ("zzz", 1, 3)
+    assert got == _ref(texts, 3)
+
+
 def test_overlapping_duplicate_spans_merge(spark):
     # two different duplicated 3-grams overlap within one doc; coverage
     # is the UNION of their token ranges, not double-counted

@@ -148,6 +148,9 @@ def test_default_redirect_and_sosse_stop(spark):
         "!zz only unknown",     # unresolved → default with FULL query
         "",
         "   ",
+        "\t\n",                 # whitespace-only: no default redirect
+        "\t!f alpha",           # tab/newline split words like a space
+        " !f alpha",
     ]
     got = _run(spark, queries, default_short_name="fake")
     for q in queries:
@@ -156,6 +159,7 @@ def test_default_redirect_and_sosse_stop(spark):
             assert q not in got, q
         else:
             assert got.get(q) == want, (q, got.get(q), want)
+    assert got["\t!f alpha"] == got[" !f alpha"] == "http://test.com/?q=alpha"
 
 
 def test_sosse_stop_beats_engine_shortcut_collision(spark):
@@ -186,19 +190,23 @@ def test_disabled_engine_shadowed_by_enabled_same_shortcut(spark):
 
 def test_fuzz_bulk_queries_match_reference_port(spark):
     """300 seeded-random queries (shortcut chars sprinkled anywhere,
-    unknown shortcuts, multi-shortcut, blank/whitespace, default
-    fallback + sosse stop active) in ONE job vs the literal port."""
+    unknown shortcuts, multi-shortcut, blank/whitespace, space/tab/
+    newline separators and padding, default fallback + sosse stop
+    active) in ONE job vs the literal port."""
     import random
 
     rng = random.Random(20240518)
     words = ["alpha", "beta", "gamma", "x1", "zz9", "!f", "!g", "!p", "!pb",
              "!h", "!hb", "!qb", "!q2", "!zz", "!nope", "!sosse", "w"]
+    spaces = [" ", " ", " ", "\t", "\n", " \t", "\n\n"]
     queries = []
     for i in range(300):
         n = rng.randint(0, 6)
-        q = " ".join(rng.choice(words) for _ in range(n)) + f" id{i}"
+        q = "".join(rng.choice(words) + rng.choice(spaces) for _ in range(n)) + f"id{i}"
+        if rng.random() < 0.3:
+            q = rng.choice(spaces) + q + rng.choice(["", *spaces])
         if rng.random() < 0.1:
-            q = "   " if rng.random() < 0.5 else ""
+            q = rng.choice(["   ", "", "\t", " \n\t "])
         queries.append(q)
     queries = list(dict.fromkeys(queries))  # the query string is the join key
 
