@@ -319,18 +319,30 @@ def assign_ids(
     Range partitions are ordered, so offset + local rank reproduces the
     exact global (disc_order, url) rank regardless of boundary placement.
 
+    The range-partitioned rows are materialized ONCE (eager
+    localCheckpoint) and both the offset collect and the returned frame
+    read that copy.  Spark seeds the range boundary sample with the RDD
+    id, so two executions of the repartition cut different ranges as
+    soon as an input partition holds more rows than the sample
+    (~60·n_parts / input partitions): offsets from one cut added to
+    local ranks from another gave 570 duplicate ids in 20k rows.  The
+    input itself is read once, by the checkpoint.
+
     base_rank offsets the first id (seeding twice within one round must
     not reuse ranks).
     """
-    part = new_rows.repartitionByRange(n_parts, F.col("disc_order").asc(), F.col("url").asc())
-    part = part.withColumn("_pid", F.spark_partition_id())
+    part = (
+        new_rows.repartitionByRange(n_parts, F.col("disc_order").asc(), F.col("url").asc())
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
     local = part.withColumn(
         "_lr",
         F.row_number().over(
             Window.partitionBy("_pid").orderBy(F.col("disc_order").asc(), F.col("url").asc())
         ),
     )
-    counts = {r["_pid"]: r["n"] for r in local.groupBy("_pid").agg(F.count("*").alias("n")).collect()}
+    counts = {r["_pid"]: r["n"] for r in part.groupBy("_pid").agg(F.count("*").alias("n")).collect()}
     offsets, acc = {}, base_rank
     for pid in sorted(counts):
         offsets[pid] = acc

@@ -31,8 +31,10 @@ import time
 from datetime import datetime, timedelta
 from typing import Optional
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sosse_spark.operators.admission import CollectionPolicy, admit_links
 from sosse_spark.operators.cookies import (
@@ -64,9 +66,36 @@ from sosse_spark.functions.hashing import normalize_numbers
 from sosse_spark.sources.tables import AppendTable, SnapshotTable
 from sosse_spark.sources.webgraph import WebConfig
 
-__all__ = ["CrawlEngine"]
+__all__ = ["CrawlEngine", "METRICS_SCHEMA"]
 
 _SKIP_ERRORS = ("PageTooBig", "TooManyRedirects")  # SkipIndexing analogs
+
+# One row per round in the `metrics` append table (run_round's return
+# value).  Parquet reads every column back nullable, so the constant is
+# declared nullable too: it is the schema the table reads with.
+METRICS_SCHEMA = T.StructType(
+    [
+        T.StructField("round_no", T.IntegerType()),
+        T.StructField("t", T.TimestampType()),
+        *[
+            T.StructField(name, T.LongType())
+            for name in (
+                "batch",
+                "fetched",
+                "success",
+                "errors",
+                "redirects",
+                "robots_rejected",
+                "cache_hits",
+                "webhook_events",
+                "links_extracted",
+                "new_urls",
+            )
+        ],
+        T.StructField("duration_sec", T.DoubleType()),
+        T.StructField("urls_per_sec", T.DoubleType()),
+    ]
+)
 
 
 class CrawlEngine:
@@ -215,23 +244,40 @@ class CrawlEngine:
         m = self.frontier.manifest()
         return (m["round"] if m else -1) + 1
 
-    def _finalize_rows(self, df: DataFrame) -> DataFrame:
-        """Project to the exact frontier schema/column order."""
-        return df.select(*[F.col(f.name).cast(f.dataType) for f in FRONTIER_SCHEMA.fields])
+    @staticmethod
+    def _finalize_rows(df: DataFrame, **values) -> DataFrame:
+        """Project onto FRONTIER_SCHEMA (its columns, order and types) in
+        ONE select: a column named in `values` takes that expression, a
+        nullable column `df` lacks is NULL.  One projection instead of a
+        withColumn chain — each withColumn re-analyzes the whole (deep,
+        per-round) plan."""
+        have = set(df.columns)
+        cols = []
+        for f in FRONTIER_SCHEMA.fields:
+            if f.name in values:
+                c = values[f.name]
+            elif f.name in have:
+                c = F.col(f.name)
+            elif f.nullable:
+                c = F.lit(None)
+            else:
+                raise ValueError(f"frontier rows lack the non-nullable column {f.name!r}")
+            cols.append(c.cast(f.dataType).alias(f.name))
+        return df.select(*cols)
+
+    def _id_parts(self) -> int:
+        """assign_ids' range-partition count: the session's shuffle
+        parallelism.  Ids do not depend on it, and assign_ids' default
+        of 32 ran a round's few hundred inserts as 32-task stages."""
+        return int(self.spark.conf.get("spark.sql.shuffle.partitions"))
 
     @staticmethod
     def _with_schema_defaults(df: Optional[DataFrame]) -> Optional[DataFrame]:
         """Schema evolution on resume: a frontier snapshot written by an
         older engine may lack newer nullable columns (e.g. `tags`) —
-        fill them with NULLs so the round algebra and MERGE see the
+        they read back as NULLs so the round algebra and MERGE see the
         current schema."""
-        if df is None:
-            return None
-        have = set(df.columns)
-        for f in FRONTIER_SCHEMA.fields:
-            if f.name not in have:
-                df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-        return df
+        return None if df is None else CrawlEngine._finalize_rows(df)
 
     def seed(self, urls: list[str], t: datetime, manual: bool = False) -> None:
         """Insert seed URLs (parity: Document.manual_queue,
@@ -266,31 +312,13 @@ class CrawlEngine:
             )
             if top is not None:
                 base_rank = top - lo
-        new = assign_ids(new, rnd, base_rank=base_rank)
-        for col, default in {
-            "crawl_first": "timestamp",
-            "crawl_last": "timestamp",
-            "crawl_dt": "long",
-            "worker_no": "int",
-            "error": "string",
-            "error_hash": "string",
-            "redirect_url": "string",
-            "content_hash": "string",
-            "max_age": "long",
-            "modified_date": "timestamp",
-            "payload_date": "timestamp",
-            "tags": "array<string>",
-            "lineage_round": "int",
-            "lineage_part": "int",
-        }.items():
-            new = new.withColumn(col, F.lit(None).cast(default))
-        new = (
-            new.withColumn("crawl_next", F.lit(t if manual else None).cast("timestamp"))
-            .withColumn("manual_crawl", F.lit(manual))
-            .withColumn("retries", F.lit(0))
-            .withColumn("robotstxt_rejected", F.lit(False))
-        )
-        new = self._finalize_rows(new).cache()
+        new = self._finalize_rows(
+            assign_ids(new, rnd, base_rank=base_rank, n_parts=self._id_parts()),
+            crawl_next=F.lit(t if manual else None),
+            manual_crawl=F.lit(manual),
+            retries=F.lit(0),
+            robotstxt_rejected=F.lit(False),
+        ).cache()
         buckets = self._touched_buckets(new)
         merged = merge_frontier(self._changed_bucket_slice(existing, buckets), None, new)
         # bloom first (superset-safe), frontier commit is the commit point
@@ -302,16 +330,29 @@ class CrawlEngine:
         )
         self.frontier.commit(self.spark, merged, self.round_no(), changed_buckets=buckets)
         new.unpersist()
+        self._free_checkpoints([new])
 
-    def _touched_buckets(self, *changed: Optional[DataFrame]) -> list[int]:
-        """Distinct buckets across the changed sets — ONE collect job."""
-        dfs = [df.select("bucket") for df in changed if df is not None]
+    def _bucket_counts(self, *changed: Optional[DataFrame]) -> dict[tuple[int, int], int]:
+        """Row count per (bucket, position of the frame in `changed`) —
+        ONE collect job, however many frames; None frames are skipped."""
+        dfs = [
+            df.select("bucket", F.lit(i).alias("frame"))
+            for i, df in enumerate(changed)
+            if df is not None
+        ]
         if not dfs:
-            return []
+            return {}
         u = dfs[0]
         for d in dfs[1:]:
             u = u.unionByName(d)
-        return sorted(r["bucket"] for r in u.distinct().collect())
+        return {
+            (r["bucket"], r["frame"]): r["count"]
+            for r in u.groupBy("bucket", "frame").count().collect()
+        }
+
+    def _touched_buckets(self, *changed: Optional[DataFrame]) -> list[int]:
+        """Distinct buckets across the changed sets — ONE collect job."""
+        return sorted({b for b, _ in self._bucket_counts(*changed)})
 
     def _changed_bucket_slice(
         self, frontier: Optional[DataFrame], buckets: list[int]
@@ -324,15 +365,22 @@ class CrawlEngine:
     # ------------------------------------------------------------------
     @staticmethod
     def _free_checkpoints(cuts) -> None:
-        """Explicitly drop localCheckpoint blocks at end of round.
-        ContextCleaner frees them only when a JVM GC notices the dropped
-        reference — at driver scale one leaked checkpointed frame per
-        round is an unbounded block-manager leak.  MUST run after every
-        use of the frames: a truncated lineage cannot recompute."""
+        """Explicitly drop the localCheckpoint blocks each frame in `cuts`
+        reads (its LogicalRDD leaves — the frame itself when it is a
+        checkpoint, or one an operator made, as assign_ids does) at end
+        of round.  ContextCleaner frees them only when a JVM GC notices
+        the dropped reference — at driver scale one leaked checkpointed
+        frame per round is an unbounded block-manager leak.  MUST run
+        after every use of the frames: a truncated lineage cannot
+        recompute."""
         for cp in cuts:
             try:
-                cp._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:
+                leaves = cp._jdf.queryExecution().analyzed().collectLeaves()
+                for i in range(leaves.size()):
+                    leaf = leaves.apply(i)
+                    if leaf.getClass().getSimpleName() == "LogicalRDD":
+                        leaf.rdd().unpersist(False)
+            except Py4JError:
                 pass  # best effort — GC + periodic cleaner remain the backstop
 
     def run_round(self, t: datetime) -> Optional[dict]:
@@ -380,18 +428,20 @@ class CrawlEngine:
         batch = batch.withColumn(
             "global_rank", F.row_number().over(Window.orderBy(*priority_order_cols()))
         ).cache()
-        n_batch = batch.count()
-        if n_batch == 0:
-            frontier.unpersist()
-            return None
-
         # --- HTTP-cache freshness gate (P12, se/html_cache.py:56-156) ----
         # fresh rows skip robots + fetch entirely and reschedule as
         # unchanged — the biggest fetch-cost reducer at recrawl scale
         fresh_pred = cache_fresh_col(now_col)
+        sizes = batch.agg(
+            F.count(F.lit(1)).alias("batch"), F.count(F.when(fresh_pred, 1)).alias("cache_hits")
+        ).collect()[0]
+        n_batch, n_cache_hits = sizes["batch"], sizes["cache_hits"]
+        if n_batch == 0:
+            batch.unpersist()
+            frontier.unpersist()
+            return None
         cache_hits = batch.filter(fresh_pred)
         to_fetch = batch.filter(~fresh_pred)
-        n_cache_hits = cache_hits.count()
 
         # --- robots: fetch rules for domains never seen before ---------
         # new-domain discovery is an ANTI-JOIN against host_rules (the
@@ -407,18 +457,14 @@ class CrawlEngine:
             new_domains = batch_domains.join(known, "url_domain", "left_anti")
         else:
             new_domains = batch_domains
-        if new_domains.limit(1).count():
-            new_rules = fetch_robots_for_domains(new_domains, self.web)
-            self.host_rules.append(spark, new_rules, round_no)
-            if self._rules_df is not None:
-                self._rules_df.unpersist()
-            self._rules_df = self.host_rules.read(spark).cache()
+        probe = new_domains.select(F.lit("robots").alias("probe")).limit(1)
 
         # --- favicons once per domain (P8, se/models.py:383-440) ---------
         # keyed off the favicons table itself so a crash-replay (favicon
         # appends truncated, host_rules kept) still refetches them.
         # html_mode resolves favicons from the PARSED head instead
         # (<link rel~=icon> selection) — url-keyed, post-fetch below.
+        new_fav = None
         if not getattr(self.web, "html_mode", False):
             fav_table = self.favicons.read(spark)
             if fav_table is not None:
@@ -426,8 +472,17 @@ class CrawlEngine:
                 new_fav = batch_domains.join(fav_known, "url_domain", "left_anti")
             else:
                 new_fav = batch_domains
-            if new_fav.limit(1).count():
-                self.favicons.append(spark, fetch_favicons_for_domains(new_fav, self.web), round_no)
+            probe = probe.unionByName(new_fav.select(F.lit("favicon").alias("probe")).limit(1))
+        # both new-domain probes in ONE job
+        found = {r["probe"] for r in probe.collect()}
+        if "robots" in found:
+            new_rules = fetch_robots_for_domains(new_domains, self.web)
+            self.host_rules.append(spark, new_rules, round_no)
+            if self._rules_df is not None:
+                self._rules_df.unpersist()
+            self._rules_df = self.host_rules.read(spark).cache()
+        if "favicon" in found:
+            self.favicons.append(spark, fetch_favicons_for_domains(new_fav, self.web), round_no)
         batch_domains.unpersist()
 
         if self._rules_df is not None:
@@ -620,11 +675,12 @@ class CrawlEngine:
         # become scan+merge only.  At 10^10-URL scale this is the
         # difference between a constant-size driver plan per round and a
         # driver that melts down stringifying/analyzing megaplans.
-        replacements = self._finalize_rows(
-            replacements.unionByName(self._finalize_rows(rejected_rows)).unionByName(
-                self._finalize_rows(cache_rows)
-            )
-        ).localCheckpoint(eager=True)
+        replacements = (
+            self._finalize_rows(replacements)
+            .unionByName(self._finalize_rows(rejected_rows))
+            .unionByName(self._finalize_rows(cache_rows))
+            .localCheckpoint(eager=True)
+        )
         lineage_cuts.append(replacements)
 
         # --- html_mode favicons, keyed by the PAGE-DECLARED icon URL ----
@@ -757,34 +813,20 @@ class CrawlEngine:
 
         prev_bloom = self._read_bloom(frontier)
         new_urls = urlseen_dedup(all_candidates, frontier, prev_bloom, self.bloom_bits)
-        new_urls = assign_ids(new_urls, round_no)
-        inserts = new_urls
-        for col, typ in {
-            "crawl_first": "timestamp",
-            "crawl_last": "timestamp",
-            "crawl_next": "timestamp",
-            "crawl_dt": "long",
-            "worker_no": "int",
-            "error": "string",
-            "error_hash": "string",
-            "redirect_url": "string",
-            "content_hash": "string",
-            "max_age": "long",
-            "modified_date": "timestamp",
-            "payload_date": "timestamp",
-            "tags": "array<string>",
-        }.items():
-            inserts = inserts.withColumn(col, F.lit(None).cast(typ))
-        inserts = (
-            inserts.withColumn("manual_crawl", F.lit(False))
-            .withColumn("retries", F.lit(0))
-            .withColumn("robotstxt_rejected", F.lit(False))
-            .withColumn("lineage_round", F.lit(round_no))
-            .withColumn("lineage_part", F.col("bucket"))
-        )
+        # assign_ids materializes its range-partitioned input once, so the
+        # whole dedup (bloom probe, frontier semi-join) runs once, there
+        new_urls = assign_ids(new_urls, round_no, n_parts=self._id_parts())
+        lineage_cuts.append(new_urls)
         # lineage cut (see the replacements note): bloom_build and the
         # frontier merge both consume this frame
-        inserts = self._finalize_rows(inserts).localCheckpoint(eager=True)
+        inserts = self._finalize_rows(
+            new_urls,
+            manual_crawl=F.lit(False),
+            retries=F.lit(0),
+            robotstxt_rejected=F.lit(False),
+            lineage_round=F.lit(round_no),
+            lineage_part=F.col("bucket"),
+        ).localCheckpoint(eager=True)
         lineage_cuts.append(inserts)
 
         # --- metrics (F30 parity counts): single-pass aggregation --------
@@ -1006,7 +1048,11 @@ class CrawlEngine:
                         F.coalesce(F.col("is_admitted"), F.lit(False)).alias("is_admitted"),
                         F.lit(round_no).alias("round_no"),
                     )
+                    # lineage cut: the links append, the pending cache
+                    # and the touched-bucket collect all read this frame
+                    .localCheckpoint(eager=True)
                 )
+                lineage_cuts.append(link_rows)
                 self.links.append(spark, link_rows, round_no)
 
             # --- P3 extern-link repoint (se/document.py:789,
@@ -1038,7 +1084,10 @@ class CrawlEngine:
                     pending = pending.unionByName(p)
                 pending = pending.dropDuplicates(["src_url", "dst_url", "link_no"]).cache()
                 matched = pending.join(F.broadcast(crawled_now), "dst_url", "left_semi").cache()
-                if matched.limit(1).count():
+                # one job answers "any match?" and "which buckets change?"
+                pend_counts = self._bucket_counts(new_externs, matched)
+                touched_pend = sorted({b for b, _ in pend_counts})
+                if any(i == 1 for _, i in pend_counts):
                     self.links.append(
                         spark,
                         matched.select(
@@ -1050,7 +1099,6 @@ class CrawlEngine:
                         ),
                         round_no,
                     )
-                touched_pend = self._touched_buckets(new_externs, matched)
                 if touched_pend:
                     remaining = pending.filter(F.col("bucket").isin(touched_pend)).join(
                         F.broadcast(crawled_now), "dst_url", "left_anti"
@@ -1151,13 +1199,16 @@ class CrawlEngine:
         # negatives BYPASS the anti-join → duplicate admissions.
         # documents/links appends above are round-tagged and truncated on
         # replay (see _repair / AppendTable.truncate_from).
-        n_new = inserts.count()
+        # one job: new-URL count, the bloom's and the frontier's buckets
+        frame_counts = self._bucket_counts(replacements, inserts)
+        insert_buckets = sorted(b for b, i in frame_counts if i == 1)
+        n_new = sum(n for (_, i), n in frame_counts.items() if i == 1)
         if n_new:
             self.bloom.commit(
                 spark,
                 bloom_build(inserts, prev_bloom, self.bloom_bits),
                 round_no,
-                changed_buckets=self._touched_buckets(inserts),
+                changed_buckets=insert_buckets,
             )
         # metrics append BEFORE the frontier commit: the row is
         # round-tagged, so a crash in between replays the round and the
@@ -1181,19 +1232,20 @@ class CrawlEngine:
             "duration_sec": duration,
             "urls_per_sec": (n_batch / duration) if duration > 0 else 0.0,
         }
+        # a literal select, not createDataFrame: a local-rows frame writes
+        # through a Python-worker task (measured ~1 s per append vs ~0.15 s)
         self.metrics.append(
             spark,
-            spark.createDataFrame(
-                [metrics_row],
-                "round_no int, t timestamp, batch long, fetched long, success long, "
-                "errors long, redirects long, robots_rejected long, cache_hits long, "
-                "webhook_events long, links_extracted long, "
-                "new_urls long, duration_sec double, urls_per_sec double",
+            spark.range(0, 1, 1, 1).select(
+                *[
+                    F.lit(metrics_row[f.name]).cast(f.dataType).alias(f.name)
+                    for f in METRICS_SCHEMA.fields
+                ]
             ),
             round_no,
         )
 
-        buckets = self._touched_buckets(replacements, inserts if n_new else None)
+        buckets = sorted({b for b, _ in frame_counts})
         untouched_frontier = self._changed_bucket_slice(frontier, buckets)
         merged = merge_frontier(untouched_frontier, replacements, inserts if n_new else None)
         self.frontier.commit(spark, merged, round_no, changed_buckets=buckets)

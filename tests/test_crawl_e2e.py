@@ -18,7 +18,7 @@ from sosse_spark.functions.images import decode_image, psnr, render_pattern
 from sosse_spark.operators.admission import CollectionPolicy
 from sosse_spark.sources.corpus import caption_for, dims_for
 from sosse_spark.sources.webgraph import WebConfig, host_no, url_of
-from sosse_spark.streaming.crawl_loop import CrawlEngine
+from sosse_spark.streaming.crawl_loop import METRICS_SCHEMA, CrawlEngine
 
 T0 = datetime(2024, 1, 1, 0, 0, 0)
 WEB = WebConfig(n_docs=40, n_hosts=4)
@@ -58,11 +58,19 @@ def crawl(spark, tmp_path_factory):
     return eng, metrics
 
 
-def test_reaches_quiescence_and_metrics(crawl):
+def test_reaches_quiescence_and_metrics(crawl, spark):
     eng, metrics = crawl
     assert 1 < len(metrics) < 12, "should quiesce before max_rounds"
     assert metrics[0]["batch"] == len(SEEDS)
     assert all(m["urls_per_sec"] > 0 for m in metrics)
+    # the persisted rows: declared schema, and `t` is the injected
+    # logical clock exactly (no type or time-zone drift on the write)
+    table = eng.metrics.read(spark)
+    assert table.schema == METRICS_SCHEMA
+    rows = sorted(table.collect(), key=lambda r: r["round_no"])
+    assert [r["round_no"] for r in rows] == [m["round_no"] for m in metrics]
+    assert [r["t"] for r in rows] == [T0 + timedelta(minutes=i) for i in range(len(metrics))]
+    assert [r["new_urls"] for r in rows] == [m["new_urls"] for m in metrics]
 
 
 def test_urlseen_unique(crawl, spark):

@@ -322,6 +322,23 @@ def test_assign_ids_base_rank_offsets(spark):
     assert got == [(1 << 32) + 6, (1 << 32) + 7]
 
 
+def test_assign_ids_exact_past_the_range_sample(spark):
+    """Inputs larger than the range partitioner's boundary sample (~60
+    rows per input partition at n_parts=4): the offsets and the local
+    ranks must come from the same range cut, so ids are exactly
+    1..n in (disc_order, url) order — no duplicates, no gaps."""
+    from sosse_spark.operators.frontier import assign_ids
+
+    n = 2000
+    df = spark.range(n).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+        ((F.col("id") * 7919) % 997).alias("disc_order"),
+    )
+    got = {r["url"]: r["id"] for r in assign_ids(df, 2, n_parts=4).collect()}
+    ranked = sorted((i * 7919 % 997, f"u{i}") for i in range(n))
+    assert got == {url: (2 << 32) + rank for rank, (_, url) in enumerate(ranked, start=1)}
+
+
 def test_cookie_match_is_equi_join(spark):
     """P18 jar matching must plan as an equi-join on suffix==domain
     (the thin suffix-explode side, bounded fan-out) — never a
@@ -1016,3 +1033,47 @@ def test_char_entropy_two_hash_aggs_no_window(spark):
     assert not any(k.startswith("Window") for k in kinds)
     assert not any("Cartesian" in k for k in kinds)
     assert sum("HashAggregate" in k for k in kinds) >= 4  # 2 aggs x partial+final
+
+
+# Spark jobs of the steady-state round below, measured once every hub
+# frame executed once and probes over one frame shared a job (52 before
+# that).  A new driver action over an unmaterialized upstream, or a probe
+# split back out of its shared job, pushes the count past this.
+CRAWL_ROUND_JOB_BUDGET = 42
+
+
+def test_crawl_round_job_budget(spark, tmp_root):
+    """A steady-state crawl round (links found, new URLs admitted, img3
+    links kept as pending externs) stays within its Spark job budget,
+    counted through the status tracker under one job group."""
+    from datetime import datetime, timedelta
+
+    from sosse_spark.operators.admission import CollectionPolicy
+    from sosse_spark.sources.webgraph import WebConfig, url_of
+    from sosse_spark.streaming.crawl_loop import CrawlEngine
+
+    web = WebConfig(n_docs=40, n_hosts=4)
+    policy = CollectionPolicy(
+        collection_id=1,
+        unlimited_regex=r"^http://img[0-2]\.example\.com/",  # img3 = extern
+        recursion_depth=2,
+        keep_params=False,
+        recrawl_freq="adaptive",
+    )
+    eng = CrawlEngine(spark, tmp_root, web, policy, n_buckets=4, batch_size=12, per_host_budget=6)
+    t0 = datetime(2024, 1, 1)
+    eng.seed([url_of(i, web) for i in (2, 11, 15, 1)], t0)
+    eng.run_round(t0)  # cold round: robots rules and favicons fetched here
+    sc = spark.sparkContext
+    group = "test_crawl_round_job_budget"
+    sc.setJobGroup(group, "steady-state run_round")
+    try:
+        m = eng.run_round(t0 + timedelta(minutes=1))
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    eng.close()
+    assert m is not None and m["links_extracted"] > 0 and m["new_urls"] > 0
+    assert eng.pending_externs.read(spark) is not None
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= CRAWL_ROUND_JOB_BUDGET, f"{n_jobs} jobs per round"
