@@ -1,9 +1,21 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the exact baseline; OR-amplified random-
-hyperplane LSH (b independent band tables of r planes each) as the scale
-path — candidate generation is an equi-join on the thin
-(_id, band_no, band_sig) key, then exact re-scoring of the candidates.
+Every top-k operator is one pipeline, the FAISS recipe (Jégou et al.
+2011, "Product Quantization for Nearest Neighbor Search"):
+
+  1. candidates — the whole corpus (`brute_force_topk`), OR-amplified
+     random-hyperplane LSH band-join hits (`lsh_topk`), or the members
+     of the probed IVF cells (`ivf_topk`, `ivfpq_topk`); a query left
+     with fewer than max(fill_min, k) candidates gets the whole corpus
+     (`_fill_starved`), so every query returns k rows;
+  2. an optional approximate shortlist — PQ-ADC or SQ8 scores over a
+     codes-only table keep shortlist_mult·k rows per query
+     (`pq_topk`, `sq_topk` via `_scan_shortlist`; `ivfpq_topk` scores
+     its IVF candidates) — the operators that need the query matrix
+     on the driver get it from one bounded collect (`_collected_topk`);
+  3. an exact JVM re-rank (`_exact_rerank`): round-6 cosine of the
+     candidates against the true vectors, rank ≤ k by (cos_sim desc,
+     id asc).
 
 Recall math (sign LSH): a pair at angle θ agrees on one plane with
 p = 1 − θ/π, on one r-plane band with p^r, and on ≥1 of b bands with
@@ -11,21 +23,27 @@ p = 1 − θ/π, on one r-plane band with p^r, and on ≥1 of b bands with
 recall at θ ≈ 60° (cos 0.5) — `bands_for_threshold` derives b from the
 operating threshold + target recall instead of hard-coding it.
 
-All dot products are JVM-side (`aggregate`/`zip_with`); no Python UDFs.
+Exact cosines are JVM-side HOF folds (`aggregate`/`zip_with`); the
+signature, cell, PQ and SQ kernels are vectorized pandas (one BLAS
+matmul per Arrow batch).
 """
 
 from __future__ import annotations
 
 import math
-from typing import Optional
+from typing import Callable, Optional
 
 # pandas is imported at module level so the type-hinted pandas UDF
 # signatures (stringified by `from __future__ import annotations`)
 # resolve via typing.get_type_hints
+import numpy as np
 import pandas as pd
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
+
+from sosse_spark.partitioning import fanout
 
 __all__ = [
     "cosine_sim",
@@ -48,38 +66,22 @@ __all__ = [
 ]
 
 
-def _dot(a: Column, b: Column, dim: Optional[int] = None) -> Column:
-    """Dot product.  With `dim` known, an UNROLLED left-fold chain
-    ((0.0 + a1·b1) + a2·b2) + … — the same association order as the HOF
-    fold, so the IEEE result is bit-identical — and whole-stage-codegen
-    compiled instead of interpreted per element.  CAVEAT (measured):
-    Catalyst + janino pay ~2-3 s PER QUERY to plan/compile the ~6·dim-
-    node tree at dim=64, while the interpreted fold sustains ~4M
-    element-ops/s — so unrolling only wins when a single query scores
-    tens of millions of elements.  The built-in rescore paths therefore
-    stay on the HOF fold (their candidate sets are bounded); pass `dim`
-    explicitly for corpus-sized exact scans."""
-    if dim:
-        acc: Column = F.lit(0.0)
-        for i in range(1, dim + 1):
-            acc = acc + a.getItem(i - 1) * b.getItem(i - 1)
-        return acc
+def _dot(a: Column, b: Column) -> Column:
+    """Dot product as an interpreted HOF left fold — not an unrolled
+    codegen chain: that is bit-identical but costs ~2-3 s of Catalyst +
+    janino per query at dim=64 (measured), a loss below tens of millions
+    of scored elements per query, which no ANN path reaches."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
     )
 
 
-def _norm(a: Column, dim: Optional[int] = None) -> Column:
-    if dim:
-        acc: Column = F.lit(0.0)
-        for i in range(1, dim + 1):
-            acc = acc + a.getItem(i - 1) * a.getItem(i - 1)
-        return F.sqrt(acc)
+def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
 
 
-def cosine_sim(a: Column, b: Column, dim: Optional[int] = None) -> Column:
-    return _dot(a, b, dim) / (_norm(a, dim) * _norm(b, dim))
+def cosine_sim(a: Column, b: Column) -> Column:
+    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 # Every *_topk entry point broadcasts or driver-collects the query
@@ -89,15 +91,181 @@ def cosine_sim(a: Column, b: Column, dim: Optional[int] = None) -> Column:
 MAX_QUERY_BATCH = 100_000
 
 
+def _query_batch_error(cap: int) -> ValueError:
+    return ValueError(
+        f"ANN query batch exceeds max_query_batch={cap}: the query side is "
+        "broadcast/driver-collected by design — split the queries into "
+        "chunks of at most that size (or raise max_query_batch if the "
+        "driver genuinely has the memory)"
+    )
+
+
 def _guard_query_batch(queries: DataFrame, cap: Optional[int]) -> None:
+    """Batch guard of the broadcasting operators: counts at most cap+1
+    rows, never the full query set."""
     cap = cap if cap is not None else MAX_QUERY_BATCH
     if queries.limit(cap + 1).count() > cap:
-        raise ValueError(
-            f"ANN query batch exceeds max_query_batch={cap}: the query side is "
-            "broadcast/driver-collected by design — split the queries into "
-            "chunks of at most that size (or raise max_query_batch if the "
-            "driver genuinely has the memory)"
+        raise _query_batch_error(cap)
+
+
+def _rank_top_k(scored: DataFrame, k: int, id_col: str, query_id_col: str) -> DataFrame:
+    """Rank tail of every top-k operator: rank 1..k per query by
+    (cos_sim desc, id asc)."""
+    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _exact_rerank(
+    cand: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """Exact re-rank of (query_id, id) candidates: join the broadcast
+    query vectors and the corpus vectors, round-6 JVM cosine, rank ≤ k.
+    → (query_id, id, cos_sim, rank) — the brute_force_topk contract."""
+    qv = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
+    cv = corpus.select(F.col(id_col), F.col(vec_col).alias("_cvec"))
+    scored = (
+        cand.join(F.broadcast(qv), query_id_col)
+        .join(cv, id_col)
+        .select(
+            query_id_col,
+            id_col,
+            F.round(cosine_sim(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
         )
+    )
+    return _rank_top_k(scored, k, id_col, query_id_col)
+
+
+def _fill_starved(
+    cand: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    fill_min: int,
+    k: int,
+    id_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """Starved-query fallback: a query with fewer than max(fill_min, k)
+    candidates gets every corpus id as a candidate — the side is (few
+    starved queries) × corpus, a bounded second pass, so every query
+    returns k rows.  The clamp matters: fill_min below k would let a
+    query with k > candidates ≥ fill_min silently return < k rows."""
+    counts = cand.groupBy(query_id_col).count()
+    starved = queries.join(
+        F.broadcast(counts.filter(F.col("count") >= max(fill_min, k))),
+        query_id_col,
+        "left_anti",
+    ).select(query_id_col)
+    fallback = corpus.select(F.col(id_col)).crossJoin(F.broadcast(starved))
+    return cand.unionByName(fallback).dropDuplicates([query_id_col, id_col])
+
+
+def _shortlist(approx: DataFrame, n: int, id_col: str, query_id_col: str) -> DataFrame:
+    """Keep each query's n best approximate scores (approx desc, id asc)
+    → (query_id, id)."""
+    w_short = Window.partitionBy(query_id_col).orderBy(F.col("approx").desc(), F.col(id_col).asc())
+    return (
+        approx.withColumn("_r", F.row_number().over(w_short))
+        .filter(F.col("_r") <= n)
+        .select(query_id_col, id_col)
+    )
+
+
+def _collected_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    candidates: Callable[[list, np.ndarray], DataFrame],
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    max_query_batch: Optional[int],
+) -> DataFrame:
+    """Pipeline of the operators whose approximate scoring needs the
+    query matrix on the driver (pq/ivfpq/sq).  ONE limit(cap+1) collect
+    enforces max_query_batch and yields the ids and the L2-normalized
+    (Q, dim) matrix; `candidates(q_ids, qv)` turns them into (query_id,
+    id) candidates, which are exactly re-ranked.  An empty batch skips
+    `candidates` and re-ranks an empty candidate set, so its schema is
+    the non-empty one."""
+    cap = max_query_batch if max_query_batch is not None else MAX_QUERY_BATCH
+    rows = queries.select(query_id_col, vec_col).limit(cap + 1).collect()
+    if len(rows) > cap:
+        raise _query_batch_error(cap)
+    if rows:
+        qv = np.array([r[1] for r in rows], dtype=np.float64)
+        qv /= np.maximum(np.linalg.norm(qv, axis=1, keepdims=True), 1e-12)
+        cand = candidates([r[0] for r in rows], qv)
+    else:
+        cand = queries.select(query_id_col).crossJoin(corpus.select(id_col)).limit(0)
+    return _exact_rerank(cand, corpus, queries, k, id_col, vec_col, query_id_col)
+
+
+def _scan_shortlist(
+    code_rows: DataFrame,
+    q_ids: list,
+    scores: Callable[[np.ndarray], np.ndarray],
+    n: int,
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """Approximate shortlist over a codes-only table (id_col, codes):
+    per Arrow batch, `scores(codes (n_rows, m))` → the (Q, n_rows)
+    approximate score matrix, of which each query keeps its n best rows;
+    the `_shortlist` window then keeps n per query overall.  The scan
+    output's id types come from the corpus and query schemas."""
+    out_schema = T.StructType(
+        [
+            T.StructField("_qid", queries.schema[query_id_col].dataType),
+            T.StructField("_id", corpus.schema[id_col].dataType),
+            T.StructField("approx", T.DoubleType()),
+        ]
+    )
+
+    def _scan(batches):
+        for pdf in batches:
+            ids = pdf["_id"].to_numpy()
+            sc_all = scores(np.stack(pdf["codes"].to_numpy()))  # (Q, n_rows)
+            # per-batch per-query shortlist keeps emitted rows bounded;
+            # lexsort (score desc, id asc — last key primary) makes the
+            # cut deterministic under ties, so the shortlist cannot
+            # depend on input partitioning
+            top = min(n, len(ids))
+            out_ids, out_scores = [], []
+            for sc in sc_all:
+                if len(ids) > top:
+                    # argpartition to the cut first, then include every
+                    # row TYING the cut score before the exact
+                    # (score desc, id asc) sort of that slice — same
+                    # result as the full per-query lexsort at
+                    # O(n + m log m) instead of O(n log n)
+                    part = np.argpartition(-sc, top - 1)[:top]
+                    cut = sc[part].min()
+                    cand = np.nonzero(sc >= cut)[0]
+                else:
+                    cand = np.arange(len(ids))
+                order = cand[np.lexsort((ids[cand], -sc[cand]))][:top]
+                out_ids.append(ids[order])
+                out_scores.append(sc[order])
+            yield pd.DataFrame(
+                {
+                    "_qid": np.repeat(q_ids, top),
+                    "_id": np.concatenate(out_ids),
+                    "approx": np.concatenate(out_scores),
+                }
+            )
+
+    scored = code_rows.select(F.col(id_col).alias("_id"), "codes").mapInPandas(_scan, out_schema)
+    return _shortlist(scored, n, "_id", "_qid").select(
+        F.col("_qid").alias(query_id_col), F.col("_id").alias(id_col)
+    )
 
 
 def brute_force_topk(
@@ -108,31 +276,20 @@ def brute_force_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     max_query_batch: Optional[int] = None,
-    dim: Optional[int] = None,
 ) -> DataFrame:
     """Exact cosine top-k per query: cross-join (queries broadcast — the
     query set is the small side), score, per-query window rank.
 
-    Pass `dim` when the vector width is statically known: the cosine
-    compiles to an unrolled whole-stage-codegen chain (bit-identical
-    result) instead of an interpreted HOF fold.
-
     → (query_id, vec_id, cos_sim, rank), rank 1..k, ties broken by id.
     """
     _guard_query_batch(queries, max_query_batch)
-    q = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias("_qvec")
-    )
+    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
     scored = corpus.select(F.col(id_col), F.col(vec_col)).crossJoin(F.broadcast(q)).select(
         query_id_col,
         id_col,
-        F.round(cosine_sim(F.col(vec_col), F.col("_qvec"), dim), 6).alias("cos_sim"),
+        F.round(cosine_sim(F.col(vec_col), F.col("_qvec")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_top_k(scored, k, id_col, query_id_col)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -142,8 +299,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     measured mean pairwise |cos| ≈ 0.75 between 'planes', i.e. they all
     point the same way — sign-LSH recall collapses for pairs orthogonal
     to that common direction.  That was round 1's 0-of-14 recall bug.)"""
-    import numpy as np
-
     rng = np.random.default_rng(seed)
     p = rng.standard_normal((n_planes, dim))
     p /= np.linalg.norm(p, axis=1, keepdims=True)
@@ -186,11 +341,6 @@ def banded_signatures(
     band) inside a vectorized pandas UDF — at 100+ bands an
     expression-tree formulation would blow up codegen, and the matrix
     product is exactly what BLAS is for."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     planes = np.array(_hyperplanes(dim, bands * rows_per_band, seed)).T  # (dim, b·r)
     weights = np.array([1 << i for i in range(rows_per_band)], dtype=np.int64)
 
@@ -224,13 +374,12 @@ def lsh_topk(
 ) -> DataFrame:
     """Approximate top-k: OR-amplified band join (b tables of r planes),
     exact rescoring of the candidate union.  Queries whose candidate set
-    is starved (< fill_min_candidates, default 8·k) fall back to an
-    exact scan — the fallback side is (few starved queries) × corpus, a
+    is starved (< max(k, fill_min_candidates), default 8·k) fall back to
+    an exact scan — the fallback side is (few starved queries) × corpus, a
     bounded second pass, so every query always returns k rows.
     """
     _guard_query_batch(queries, max_query_batch)
     fill_min = fill_min_candidates if fill_min_candidates is not None else 8 * k
-    from sosse_spark.partitioning import fanout
 
     # corpus-side signatures are a CPU-bound Arrow stage over a narrow
     # scan — fan out to the session parallelism (the query side stays
@@ -247,34 +396,28 @@ def lsh_topk(
         .dropDuplicates([query_id_col, id_col])
     )
 
-    # starved queries → exact scan (anti-join keeps this set small)
-    cand_counts = cand.groupBy(query_id_col).count()
-    starved = (
-        queries.join(
-            F.broadcast(cand_counts.filter(F.col("count") >= fill_min)),
-            query_id_col,
-            "left_anti",
-        )
-        .select(query_id_col, vec_col)
-    )
-    fallback = corpus.select(F.col(id_col)).crossJoin(
-        F.broadcast(starved.select(query_id_col))
-    )
-    all_cand = cand.unionByName(fallback).dropDuplicates([query_id_col, id_col])
+    all_cand = _fill_starved(cand, corpus, queries, fill_min, k, id_col, query_id_col)
+    return _exact_rerank(all_cand, corpus, queries, k, id_col, vec_col, query_id_col)
 
-    qv = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
-    cv = corpus.select(F.col(id_col), F.col(vec_col).alias("_cvec"))
-    scored = (
-        all_cand.join(F.broadcast(qv), query_id_col)
-        .join(cv, id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(cosine_sim(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
-        )
+
+def _train_sample(
+    corpus: DataFrame, max_train: int, id_col: str, vec_col: str, op: str
+) -> np.ndarray:
+    """Training sample of ivf/pq/sq_train: `ORDER BY xxhash64(id) LIMIT
+    max_train` — a deterministic pseudo-random subset independent of row
+    order, so the collect is bounded by max_train, never by corpus size
+    — as an L2-normalized (n, dim) float64 matrix."""
+    rows = (
+        corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        .orderBy(F.xxhash64(F.col("_id").cast("string")), F.col("_id"))
+        .limit(max_train)
+        .collect()
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    if not rows:
+        raise ValueError(f"{op}: corpus is empty — nothing to train on")
+    x = np.array([r["_v"] for r in rows], dtype=np.float64)
+    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    return x
 
 
 def ivf_train(
@@ -289,22 +432,10 @@ def ivf_train(
     """Deterministic IVF centroid training: Lloyd k-means on a bounded,
     hash-ordered sample (the FAISS-style recipe — training on a ≤100k
     sample is standard; the index build and search stay distributed).
-
-    Sample selection is `ORDER BY xxhash64(id) LIMIT max_train` — a
-    deterministic pseudo-random subset independent of row order.  The
-    collect is bounded by max_train, never by corpus size.  Vectors are
-    L2-normalized before clustering so argmin-L2 ≡ argmax-cosine.
+    The sample (`_train_sample`) is L2-normalized, so argmin-L2 ≡
+    argmax-cosine.
     """
-    import numpy as np
-
-    rows = (
-        corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .orderBy(F.xxhash64(F.col("_id").cast("string")), F.col("_id"))
-        .limit(max_train)
-        .collect()
-    )
-    x = np.array([r["_v"] for r in rows], dtype=np.float64)
-    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    x = _train_sample(corpus, max_train, id_col, vec_col, "ivf_train")
     rng = np.random.default_rng(seed)
     cents = x[rng.choice(len(x), size=min(n_centroids, len(x)), replace=False)].copy()
     for _ in range(iters):
@@ -321,11 +452,6 @@ def ivf_train(
 def _cell_udf(centroids: list[list[float]], n_probe: int):
     """pandas UDF: vectors → array of the n_probe nearest centroid ids
     (ONE BLAS matrix multiply per Arrow batch — never a ×C row blowup)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     c = np.array(centroids, dtype=np.float64).T  # (dim, C)
 
     def _cells(vecs: pd.Series) -> pd.Series:
@@ -347,8 +473,6 @@ def ivf_assign(
     """Index build: → (id, cell).  One vectorized pass; at corpus scale
     this table is what gets partitioned/bucketed BY cell so a probe
     touches only its cells' partitions."""
-    from sosse_spark.partitioning import fanout
-
     cell = _cell_udf(centroids, 1)
     return fanout(corpus).select(
         F.col(id_col), cell(F.col(vec_col)).getItem(0).alias("cell")
@@ -379,7 +503,28 @@ def ivf_topk(
     persisted index) to skip the assignment pass.
     """
     _guard_query_batch(queries, max_query_batch)
-    fill_min = fill_min_candidates if fill_min_candidates is not None else 2 * k
+    cand = _ivf_candidates(
+        corpus, queries, centroids, n_probe, fill_min_candidates, k, assignment,
+        id_col, vec_col, query_id_col,
+    )
+    return _exact_rerank(cand, corpus, queries, k, id_col, vec_col, query_id_col)
+
+
+def _ivf_candidates(
+    corpus: DataFrame,
+    queries: DataFrame,
+    centroids: list,
+    n_probe: int,
+    fill_min_candidates: Optional[int],
+    k: int,
+    assignment: Optional[DataFrame],
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """IVF candidate step of ivf/ivfpq_topk: corpus cells ⋈
+    broadcast(query probe cells) on `cell`, then the starved-query
+    fallback (fill_min default 2·k) → (query_id, id)."""
     cells = assignment if assignment is not None else ivf_assign(corpus, centroids, id_col, vec_col)
     probe = _cell_udf(centroids, n_probe)
     q_cells = queries.select(
@@ -391,28 +536,8 @@ def ivf_topk(
         .select(F.col("_qid").alias(query_id_col), F.col(id_col))
         .dropDuplicates([query_id_col, id_col])
     )
-    cand_counts = cand.groupBy(query_id_col).count()
-    starved = queries.join(
-        F.broadcast(cand_counts.filter(F.col("count") >= max(fill_min, k))),
-        query_id_col,
-        "left_anti",
-    ).select(query_id_col)
-    fallback = corpus.select(F.col(id_col)).crossJoin(F.broadcast(starved))
-    all_cand = cand.unionByName(fallback).dropDuplicates([query_id_col, id_col])
-
-    qv = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
-    cv = corpus.select(F.col(id_col), F.col(vec_col).alias("_cvec"))
-    scored = (
-        all_cand.join(F.broadcast(qv), query_id_col)
-        .join(cv, id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(cosine_sim(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    fill_min = fill_min_candidates if fill_min_candidates is not None else 2 * k
+    return _fill_starved(cand, corpus, queries, fill_min, k, id_col, query_id_col)
 
 
 def _blocked_exact_candidates(
@@ -442,8 +567,6 @@ def _blocked_exact_candidates(
     would emit ~40% of all n² pairs as candidate ROWS through a shuffle,
     which loses to dense FLOPs by orders of magnitude.
     """
-    import pandas as pd
-
     n = df.count()
     G = max(1, math.ceil(n / target_block))
     rep = (
@@ -469,8 +592,6 @@ def _blocked_exact_candidates(
     cut = float(threshold - margin)
 
     def _pairs(key, pdf):
-        import numpy as np
-
         ci, cj = int(key[0]), int(key[1])
         # replication emits each row exactly once per partner block, so
         # every cell (incl. the diagonal) holds one copy per member
@@ -537,8 +658,6 @@ def embedding_near_dup_pairs(
     if random_pair_fraction > 0.05:
         cand = _blocked_exact_candidates(df, threshold, id_col, vec_col)
     else:
-        from sosse_spark.partitioning import fanout
-
         sig = banded_signatures(fanout(df), dim, bands, rows_per_band, id_col, vec_col, seed)
         a, b = sig.alias("a"), sig.alias("b")
         cand = (
@@ -551,6 +670,14 @@ def embedding_near_dup_pairs(
             .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
             .dropDuplicates(["id_a", "id_b"])
         )
+    return _verified_pairs(cand, df, threshold, id_col, vec_col)
+
+
+def _verified_pairs(
+    cand: DataFrame, df: DataFrame, threshold: float, id_col: str, vec_col: str
+) -> DataFrame:
+    """Exact verify of candidate pairs (id_a, id_b): join both vectors,
+    round-6 JVM cosine, keep cos_sim ≥ threshold → (id_a, id_b, cos_sim)."""
     va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
     pairs = (
@@ -571,11 +698,6 @@ def _semantic_cell_udf(centroids: list[list[float]]):
     the argmax and ties break to the LOWEST centroid index, so the
     assignment is reproducible by any engine that computes round-6
     cosine (the DuckDB oracle does exactly that)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     c = np.array(centroids, dtype=np.float64)
     c /= np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
 
@@ -613,8 +735,6 @@ def semantic_dedup(
     Centroids come from `ivf_train` (bounded-sample Lloyd) or any
     deterministic rule; they ride inside the UDF closure (broadcast).
     """
-    from sosse_spark.partitioning import fanout
-
     cells = fanout(corpus).select(
         F.col(id_col).alias("_id"),
         _semantic_cell_udf(centroids)(F.col(vec_col)).alias("cell"),
@@ -622,17 +742,8 @@ def semantic_dedup(
     a = cells.select(F.col("_id").alias("id_a"), "cell")
     b = cells.select(F.col("_id").alias("id_b"), "cell")
     cand = a.join(b, "cell").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
-    va = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    vb = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
     dup = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cosine_sim(F.col("_va"), F.col("_vb")), 6).alias("cs"),
-        )
-        .filter(F.col("cs") >= threshold)
+        _verified_pairs(cand, corpus, threshold, id_col, vec_col)
         .groupBy("id_b")
         .agg(F.min("id_a").alias("dup_of"))
     )
@@ -670,18 +781,7 @@ def pq_train(
     contract as ivf_train: driver holds ≤ max_train sample rows and the
     codebooks, never the corpus.
     """
-    import numpy as np
-
-    rows = (
-        corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .orderBy(F.xxhash64(F.col("_id").cast("string")), F.col("_id"))
-        .limit(max_train)
-        .collect()
-    )
-    if not rows:
-        raise ValueError("pq_train: corpus is empty — nothing to train on")
-    x = np.array([r["_v"] for r in rows], dtype=np.float64)
-    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    x = _train_sample(corpus, max_train, id_col, vec_col, "pq_train")
     dsub = x.shape[1] // m_sub
     rng = np.random.default_rng(seed)
     books = []
@@ -703,11 +803,6 @@ def pq_train(
 def _pq_code_udf(codebooks: list):
     """pandas UDF: vectors → m_sub nearest-centroid codes (one argmin
     per sub-space, vectorized per Arrow batch)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     books = [np.array(b, dtype=np.float64) for b in codebooks]
     dsub = books[0].shape[1]
 
@@ -726,6 +821,14 @@ def _pq_code_udf(codebooks: list):
     return pandas_udf(_codes, T.ArrayType(T.IntegerType()))
 
 
+def _adc_tables(qv: np.ndarray, codebooks: list) -> np.ndarray:
+    """PQ-ADC lookup tables (Q, m_sub, n_codes) of q_sub · codeword —
+    cosine on normalized inputs decomposes as the sum of sub-space dots."""
+    books = [np.array(b, dtype=np.float64) for b in codebooks]
+    dsub = books[0].shape[1]
+    return np.stack([qv[:, s * dsub : (s + 1) * dsub] @ cb.T for s, cb in enumerate(books)], axis=1)
+
+
 def pq_encode(
     corpus: DataFrame,
     codebooks: list,
@@ -736,8 +839,6 @@ def pq_encode(
     table is the object that lives in memory at 100 TB scale — m_sub
     bytes per vector instead of 4·dim; the float vectors stay in cold
     storage and are fetched only for the exact re-rank of shortlists."""
-    from sosse_spark.partitioning import fanout
-
     code = _pq_code_udf(codebooks)
     return fanout(corpus).select(F.col(id_col), code(F.col(vec_col)).alias("codes"))
 
@@ -769,104 +870,24 @@ def pq_topk(
     row; queries (with their ADC tables) broadcast inside the kernel;
     true vectors join back once for shortlist_mult·k·|Q| rows.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    def candidates(q_ids, qv):
+        tables = _adc_tables(qv, codebooks)
 
-    _guard_query_batch(queries, max_query_batch)
-    books = [np.array(b, dtype=np.float64) for b in codebooks]
-    dsub = books[0].shape[1]
-    q_rows = queries.select(F.col(query_id_col).alias("_qid"), F.col(vec_col).alias("_qv")).collect()
-    if not q_rows:
-        return (
-            corpus.select(F.col(id_col))
-            .limit(0)
-            .select(
-                F.lit(None).cast("long").alias(query_id_col),
-                F.col(id_col),
-                F.lit(0.0).alias("cos_sim"),
-                F.lit(0).alias("rank"),
-            )
-        )
-    q_ids = [r["_qid"] for r in q_rows]
-    qv = np.array([r["_qv"] for r in q_rows], dtype=np.float64)
-    qv /= np.maximum(np.linalg.norm(qv, axis=1, keepdims=True), 1e-12)
-    # ADC tables: (Q, m_sub, n_codes) of q_sub · codebook — cosine on
-    # normalized inputs decomposes as the sum of sub-space dots
-    tables = np.stack(
-        [np.stack([qv[:, s * dsub : (s + 1) * dsub] @ cb.T for s, cb in enumerate(books)], axis=1)]
-    )[0]  # (Q, m, n_codes)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("_qid", T.LongType()),
-            T.StructField("_id", T.LongType()),
-            T.StructField("approx", T.DoubleType()),
-        ]
-    )
-    shortlist_n = shortlist_mult * k
-
-    def _scan(batches):
-        for pdf in batches:
-            codes_arr = np.stack(pdf["codes"].to_numpy())  # (n, m)
-            ids = pdf["_id"].to_numpy()
+        def scores(codes_arr):
             # (Q, n): sum over sub-spaces of table[q, s, code]
-            scores = np.zeros((len(q_ids), len(ids)))
+            out = np.zeros((len(q_ids), len(codes_arr)))
             for s in range(codes_arr.shape[1]):
-                scores += tables[:, s, :][:, codes_arr[:, s]]
-            # per-batch per-query shortlist keeps emitted rows bounded;
-            # lexsort (score desc, id asc — last key primary) makes the
-            # cut deterministic under ties, so the shortlist cannot
-            # depend on input partitioning
-            top = min(shortlist_n, len(ids))
-            out_ids, out_scores = [], []
-            for qi in range(len(q_ids)):
-                sc = scores[qi]
-                if len(ids) > top:
-                    # argpartition to the cut first, then include every
-                    # row TYING the cut score before the exact
-                    # (score desc, id asc) sort of that slice — same
-                    # result as the full per-query lexsort at
-                    # O(n + m log m) instead of O(n log n) (ADVICE r5)
-                    part = np.argpartition(-sc, top - 1)[:top]
-                    cut = sc[part].min()
-                    cand = np.nonzero(sc >= cut)[0]
-                else:
-                    cand = np.arange(len(ids))
-                order = cand[np.lexsort((ids[cand], -sc[cand]))][:top]
-                out_ids.append(ids[order])
-                out_scores.append(sc[order])
-            yield pd.DataFrame(
-                {
-                    "_qid": np.repeat(q_ids, top),
-                    "_id": np.concatenate(out_ids),
-                    "approx": np.concatenate(out_scores),
-                }
-            )
+                out += tables[:, s, :][:, codes_arr[:, s]]
+            return out
 
-    code_rows = (codes if codes is not None else pq_encode(corpus, codebooks, id_col, vec_col)).select(
-        F.col(id_col).alias("_id"), "codes"
-    )
-    scored = code_rows.mapInPandas(_scan, out_schema)
-    w_short = Window.partitionBy("_qid").orderBy(F.col("approx").desc(), F.col("_id").asc())
-    shortlist = (
-        scored.withColumn("_r", F.row_number().over(w_short))
-        .filter(F.col("_r") <= shortlist_n)
-        .select(F.col("_qid").alias(query_id_col), F.col("_id").alias(id_col))
-    )
-    qvdf = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
-    cvdf = corpus.select(F.col(id_col), F.col(vec_col).alias("_cvec"))
-    exact = (
-        shortlist.join(F.broadcast(qvdf), query_id_col)
-        .join(cvdf, id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(cosine_sim(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
+        code_rows = codes if codes is not None else pq_encode(corpus, codebooks, id_col, vec_col)
+        return _scan_shortlist(
+            code_rows, q_ids, scores, shortlist_mult * k, corpus, queries, id_col, query_id_col
         )
+
+    return _collected_topk(
+        corpus, queries, k, candidates, id_col, vec_col, query_id_col, max_query_batch
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-    return exact.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def ivfpq_topk(
@@ -897,92 +918,34 @@ def ivfpq_topk(
     vectors stay in cold storage and are read for |Q|·shortlist rows a
     query batch.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    _guard_query_batch(queries, max_query_batch)
-    fill_min = fill_min_candidates if fill_min_candidates is not None else 2 * k
-    q_rows = queries.select(F.col(query_id_col).alias("_qid"), F.col(vec_col).alias("_qv")).collect()
-    if not q_rows:
-        return (
-            corpus.select(F.col(id_col))
-            .limit(0)
-            .select(
-                F.lit(None).cast("long").alias(query_id_col),
-                F.col(id_col),
-                F.lit(0.0).alias("cos_sim"),
-                F.lit(0).alias("rank"),
-            )
+    def candidates(q_ids, qv):
+        tables = _adc_tables(qv, codebooks)
+        qid_to_idx = {q: i for i, q in enumerate(q_ids)}
+        cand = _ivf_candidates(
+            corpus, queries, centroids, n_probe, fill_min_candidates, k, assignment,
+            id_col, vec_col, query_id_col,
         )
-    books = [np.array(b, dtype=np.float64) for b in codebooks]
-    dsub = books[0].shape[1]
-    qv = np.array([r["_qv"] for r in q_rows], dtype=np.float64)
-    qv /= np.maximum(np.linalg.norm(qv, axis=1, keepdims=True), 1e-12)
-    tables = np.stack(
-        [qv[:, s * dsub : (s + 1) * dsub] @ cb.T for s, cb in enumerate(books)], axis=1
-    )  # (Q, m, n_codes)
-    qid_to_idx = {r["_qid"]: i for i, r in enumerate(q_rows)}
+        # PQ-ADC approx scoring of the IVF candidates only
+        code_rows = codes if codes is not None else pq_encode(corpus, codebooks, id_col, vec_col)
+        with_codes = cand.join(code_rows.select(F.col(id_col), "codes"), id_col)
 
-    # --- IVF candidate generation (cells equi-join, starved fallback) --
-    cells = assignment if assignment is not None else ivf_assign(corpus, centroids, id_col, vec_col)
-    probe = _cell_udf(centroids, n_probe)
-    q_cells = queries.select(
-        F.col(query_id_col).alias("_qid"), F.explode(probe(F.col(vec_col))).alias("cell")
-    )
-    cand = (
-        cells.join(F.broadcast(q_cells), "cell")
-        .select(F.col("_qid").alias(query_id_col), F.col(id_col))
-        .dropDuplicates([query_id_col, id_col])
-    )
-    cand_counts = cand.groupBy(query_id_col).count()
-    starved = queries.join(
-        F.broadcast(cand_counts.filter(F.col("count") >= max(fill_min, k))),
-        query_id_col,
-        "left_anti",
-    ).select(query_id_col)
-    fallback = corpus.select(F.col(id_col)).crossJoin(F.broadcast(starved))
-    all_cand = cand.unionByName(fallback).dropDuplicates([query_id_col, id_col])
+        def _adc(qids: pd.Series, code_s: pd.Series) -> pd.Series:
+            c = np.stack(code_s.to_numpy())  # (n, m)
+            qi = qids.map(qid_to_idx).to_numpy()
+            total = np.zeros(len(c))
+            for s in range(c.shape[1]):
+                total += tables[qi, s, c[:, s]]
+            return pd.Series(total)
 
-    # --- PQ-ADC approx scoring of candidates only ----------------------
-    code_rows = (codes if codes is not None else pq_encode(corpus, codebooks, id_col, vec_col))
-    with_codes = all_cand.join(code_rows.select(F.col(id_col), "codes"), id_col)
-
-    def _adc(qids: pd.Series, code_s: pd.Series) -> pd.Series:
-        c = np.stack(code_s.to_numpy())  # (n, m)
-        qi = qids.map(qid_to_idx).to_numpy()
-        total = np.zeros(len(c))
-        for s in range(c.shape[1]):
-            total += tables[qi, s, c[:, s]]
-        return pd.Series(total)
-
-    adc = pandas_udf(_adc, T.DoubleType())
-    scored_approx = with_codes.select(
-        query_id_col, id_col, adc(F.col(query_id_col), F.col("codes")).alias("approx")
-    )
-    shortlist_n = shortlist_mult * k
-    w_short = Window.partitionBy(query_id_col).orderBy(F.col("approx").desc(), F.col(id_col).asc())
-    shortlist = (
-        scored_approx.withColumn("_r", F.row_number().over(w_short))
-        .filter(F.col("_r") <= shortlist_n)
-        .select(query_id_col, id_col)
-    )
-
-    # --- exact re-rank of the shortlist --------------------------------
-    qvdf = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
-    cvdf = corpus.select(F.col(id_col), F.col(vec_col).alias("_cvec"))
-    exact = (
-        shortlist.join(F.broadcast(qvdf), query_id_col)
-        .join(cvdf, id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(cosine_sim(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
+        adc = pandas_udf(_adc, T.DoubleType())
+        approx = with_codes.select(
+            query_id_col, id_col, adc(F.col(query_id_col), F.col("codes")).alias("approx")
         )
+        return _shortlist(approx, shortlist_mult * k, id_col, query_id_col)
+
+    return _collected_topk(
+        corpus, queries, k, candidates, id_col, vec_col, query_id_col, max_query_batch
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-    return exact.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def sq_train(
@@ -1001,18 +964,7 @@ def sq_train(
     ivf_train / pq_train: the driver holds <= max_train sample rows and
     2*dim floats, never the corpus.
     """
-    import numpy as np
-
-    rows = (
-        corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .orderBy(F.xxhash64(F.col("_id").cast("string")), F.col("_id"))
-        .limit(max_train)
-        .collect()
-    )
-    if not rows:
-        raise ValueError("sq_train: corpus is empty — nothing to train on")
-    x = np.array([r["_v"] for r in rows], dtype=np.float64)
-    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    x = _train_sample(corpus, max_train, id_col, vec_col, "sq_train")
     return [x.min(axis=0).tolist(), x.max(axis=0).tolist()]
 
 
@@ -1021,11 +973,6 @@ def _sq_code_udf(bounds: list):
     [0,255], round via np.floor(x+0.5) = HALF_UP — matching Spark
     F.round / DuckDB round, NOT np.rint's banker's rounding, so oracle
     twins can recompute codes in SQL), vectorized per Arrow batch."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     vmin = np.array(bounds[0], dtype=np.float64)
     span = np.maximum(np.array(bounds[1], dtype=np.float64) - vmin, 1e-12)
 
@@ -1050,8 +997,6 @@ def sq_encode(
     vector (4x smaller than float32, 8x smaller than the float64 the
     exact path computes in); the float vectors stay in cold storage and
     are fetched only for the exact re-rank of shortlists."""
-    from sosse_spark.partitioning import fanout
-
     code = _sq_code_udf(bounds)
     return fanout(corpus).select(F.col(id_col), code(F.col(vec_col)).alias("codes"))
 
@@ -1089,96 +1034,21 @@ def sq_topk(
     their affine weights) ride inside the kernel closure; true vectors
     join back once for shortlist_mult*k*|Q| rows.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    _guard_query_batch(queries, max_query_batch)
-    q_rows = queries.select(F.col(query_id_col).alias("_qid"), F.col(vec_col).alias("_qv")).collect()
-    if not q_rows:
-        return (
-            corpus.select(F.col(id_col))
-            .limit(0)
-            .select(
-                F.lit(None).cast("long").alias(query_id_col),
-                F.col(id_col),
-                F.lit(0.0).alias("cos_sim"),
-                F.lit(0).alias("rank"),
-            )
-        )
     vmin = np.array(bounds[0], dtype=np.float64)
     span = np.maximum(np.array(bounds[1], dtype=np.float64) - vmin, 1e-12)
-    q_ids = [r["_qid"] for r in q_rows]
-    qv = np.array([r["_qv"] for r in q_rows], dtype=np.float64)
-    qv /= np.maximum(np.linalg.norm(qv, axis=1, keepdims=True), 1e-12)
-    weights = qv * span[None, :] / 255.0  # (Q, dim)
-    consts = qv @ vmin  # (Q,)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("_qid", T.LongType()),
-            T.StructField("_id", T.LongType()),
-            T.StructField("approx", T.DoubleType()),
-        ]
-    )
-    shortlist_n = shortlist_mult * k
+    def candidates(q_ids, qv):
+        weights = qv * span[None, :] / 255.0  # (Q, dim)
+        consts = qv @ vmin  # (Q,)
 
-    def _scan(batches):
-        for pdf in batches:
-            codes_arr = np.stack(pdf["codes"].to_numpy()).astype(np.float64)  # (n, dim)
-            ids = pdf["_id"].to_numpy()
-            scores = weights @ codes_arr.T + consts[:, None]  # (Q, n)
-            top = min(shortlist_n, len(ids))
-            # deterministic per-batch shortlist: lexsort (last key is
-            # primary) ranks by score desc THEN id asc, so ties at the
-            # cut boundary cannot evict a lower-id true-top-k member —
-            # argpartition's arbitrary tie handling made the result
-            # depend on input partitioning
-            out_ids, out_scores = [], []
-            for qi in range(len(q_ids)):
-                sc = scores[qi]
-                if len(ids) > top:
-                    # argpartition to the cut first, then include every
-                    # row TYING the cut score before the exact
-                    # (score desc, id asc) sort of that slice — same
-                    # result as the full per-query lexsort at
-                    # O(n + m log m) instead of O(n log n) (ADVICE r5)
-                    part = np.argpartition(-sc, top - 1)[:top]
-                    cut = sc[part].min()
-                    cand = np.nonzero(sc >= cut)[0]
-                else:
-                    cand = np.arange(len(ids))
-                order = cand[np.lexsort((ids[cand], -sc[cand]))][:top]
-                out_ids.append(ids[order])
-                out_scores.append(sc[order])
-            yield pd.DataFrame(
-                {
-                    "_qid": np.repeat(q_ids, top),
-                    "_id": np.concatenate(out_ids),
-                    "approx": np.concatenate(out_scores),
-                }
-            )
+        def scores(codes_arr):
+            return weights @ codes_arr.astype(np.float64).T + consts[:, None]  # (Q, n)
 
-    code_rows = (codes if codes is not None else sq_encode(corpus, bounds, id_col, vec_col)).select(
-        F.col(id_col).alias("_id"), "codes"
-    )
-    scored = code_rows.mapInPandas(_scan, out_schema)
-    w_short = Window.partitionBy("_qid").orderBy(F.col("approx").desc(), F.col("_id").asc())
-    shortlist = (
-        scored.withColumn("_r", F.row_number().over(w_short))
-        .filter(F.col("_r") <= shortlist_n)
-        .select(F.col("_qid").alias(query_id_col), F.col("_id").alias(id_col))
-    )
-    qvdf = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
-    cvdf = corpus.select(F.col(id_col), F.col(vec_col).alias("_cvec"))
-    exact = (
-        shortlist.join(F.broadcast(qvdf), query_id_col)
-        .join(cvdf, id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(cosine_sim(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
+        code_rows = codes if codes is not None else sq_encode(corpus, bounds, id_col, vec_col)
+        return _scan_shortlist(
+            code_rows, q_ids, scores, shortlist_mult * k, corpus, queries, id_col, query_id_col
         )
+
+    return _collected_topk(
+        corpus, queries, k, candidates, id_col, vec_col, query_id_col, max_query_batch
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-    return exact.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

@@ -107,6 +107,56 @@ def test_lsh_topk_starved_query_fill(spark):
     queries = emb.filter(F.col("vec_id") == 0).select(F.col("vec_id").alias("query_id"), "embedding")
     got = lsh_topk(emb, queries, dim=16, k=5, bands=2, rows_per_band=10).collect()
     assert len(got) == 5
+    # fill_min_candidates below k is clamped to k: a query with fewer
+    # than k band hits still takes the exact-scan fallback
+    got = lsh_topk(
+        emb, queries, dim=16, k=5, bands=2, rows_per_band=10, fill_min_candidates=1
+    ).collect()
+    assert len(got) == 5
+
+
+def test_ann_topk_string_ids_and_empty_batch_schema(spark):
+    """Every top-k operator takes its id types from the inputs: string
+    ids give k rows per query and brute_force_topk's schema, at
+    exhaustive settings the exact top-k, and an empty query batch
+    yields that same schema."""
+    from sosse_spark.operators.similarity import (
+        brute_force_topk,
+        ivf_topk,
+        ivf_train,
+        ivfpq_topk,
+        lsh_topk,
+        pq_topk,
+        pq_train,
+        sq_topk,
+        sq_train,
+    )
+
+    emb = _embeddings(spark, n=20, dim=16).select(
+        F.concat(F.lit("v"), F.col("vec_id").cast("string")).alias("vec_id"), "embedding"
+    )
+    queries = emb.filter(F.col("vec_id").isin("v0", "v7")).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    cents = ivf_train(emb, n_centroids=4, iters=3)
+    books = pq_train(emb, m_sub=4, n_codes=8, iters=3)
+    bounds = sq_train(emb)
+    ops = {
+        "lsh": lambda q: lsh_topk(emb, q, dim=16, k=3, bands=2, rows_per_band=10),
+        "ivf": lambda q: ivf_topk(emb, q, cents, k=3, n_probe=4),
+        "pq": lambda q: pq_topk(emb, q, books, k=3, shortlist_mult=10),
+        "ivfpq": lambda q: ivfpq_topk(emb, q, cents, books, k=3, n_probe=4, shortlist_mult=10),
+        "sq": lambda q: sq_topk(emb, q, bounds, k=3, shortlist_mult=10),
+    }
+    exact = brute_force_topk(emb, queries, k=3)
+    want = sorted(tuple(r) for r in exact.collect())
+    assert len(want) == 6 and all(r[1].startswith("v") for r in want)
+    assert brute_force_topk(emb, queries.limit(0), k=3).schema == exact.schema
+    for name, op in ops.items():
+        got = op(queries)
+        assert got.schema == exact.schema, name
+        assert sorted(tuple(r) for r in got.collect()) == want, name
+        assert op(queries.limit(0)).schema == exact.schema, name
 
 
 def test_ivf_topk_recall_and_fill(spark):
@@ -588,8 +638,9 @@ def test_stratified_sample_deterministic_proportions(spark):
 
 def test_ann_query_batch_guard(spark):
     """The 'small query batch' contract is enforced: an oversized query
-    side raises with a chunking instruction BEFORE any driver collect
-    or broadcast (all five top-k entry points)."""
+    side raises with a chunking instruction before any broadcast, and
+    the guard reads at most cap+1 query rows, never the full set (all
+    six top-k entry points)."""
     import pytest as _pytest
 
     from sosse_spark.operators.similarity import (
@@ -598,6 +649,7 @@ def test_ann_query_batch_guard(spark):
         ivfpq_topk,
         lsh_topk,
         pq_topk,
+        sq_topk,
     )
 
     emb = _embeddings(spark, n=20)
@@ -608,11 +660,12 @@ def test_ann_query_batch_guard(spark):
         lambda: ivf_topk(emb, queries, [[0.0] * 16], k=2, max_query_batch=5),
         lambda: pq_topk(emb, queries, [[[0.0] * 8]], k=2, max_query_batch=5),
         lambda: ivfpq_topk(emb, queries, [[0.0] * 16], [[[0.0] * 8]], k=2, max_query_batch=5),
+        lambda: sq_topk(emb, queries, [[0.0] * 16, [1.0] * 16], k=2, max_query_batch=5),
     ):
         with _pytest.raises(ValueError, match="max_query_batch"):
             call()
-    # at/under the cap: passes through (guard is a limit(cap+1).count —
-    # never a full count/collect)
+    # at/under the cap: passes through (the guard is a limit(cap+1)
+    # count or collect — at most cap+1 rows, never the full set)
     small = queries.limit(3)
     got = brute_force_topk(emb, small, k=2, max_query_batch=5).collect()
     assert len(got) == 6
