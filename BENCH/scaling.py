@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 def run_job(cpus: int, n_frontier: int, rounds: int = 2) -> dict:
     from bench import make_spark, synthetic_frontier
     from sosse_spark.operators.frontier import bloom_build, urlseen_dedup, with_bucket
-    from sosse_spark.operators.scheduler import select_batch
+    from sosse_spark.operators.scheduler import eligible_filter, per_host_topk, priority_order_cols
 
     spark = make_spark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
@@ -54,8 +54,8 @@ def run_job(cpus: int, n_frontier: int, rounds: int = 2) -> dict:
         wc = ws.withColumn("crawl_recurse", F.lit(0).cast("int")).withColumn(
             "disc_order", F.lit(0).cast("long")
         ).withColumn("url_domain", F.lit("h")).withColumn("url_path", F.lit("/p"))
-        select_batch(wf, F.lit("2024-01-03 00:00:00").cast("timestamp"), 1000,
-                     per_host_budget=50, salt_buckets=8, exact_global_order=False).count()
+        wnow = F.lit("2024-01-03 00:00:00").cast("timestamp")
+        per_host_topk(wf.filter(eligible_filter(wnow)), "url_domain", priority_order_cols(), 50, 8).count()
         urlseen_dedup(wc, ws.select("url", "collection_id"),
                       bloom_build(ws, None, m_bits=m_bits, k=3), m_bits=m_bits, k=3).count()
 
@@ -95,10 +95,9 @@ def run_job(cpus: int, n_frontier: int, rounds: int = 2) -> dict:
             t0 = time.time()
             # politeness budget bounds the claim (the bulk-crawl shape); no
             # single-point global-limit merge in the plan
-            batch = select_batch(
-                frontier, now, batch_size=n_frontier // 10,
-                per_host_budget=max(n_frontier // 5000, 50),
-                salt_buckets=8, exact_global_order=False,
+            batch = per_host_topk(
+                frontier.filter(eligible_filter(now)), "url_domain", priority_order_cols(),
+                max(n_frontier // 5000, 50), 8,
             )
             n_batch = batch.count()
             t_sched = time.time() - t0
@@ -237,7 +236,7 @@ python-worker stages degrade ~10x/task above ~8-16 concurrent workers
 (round-2 measurement, which forced a 2<->8 comparison then), while
 pure-JVM stages scale normally.  Every stage is keyed by url-hash
 bucket or host with no single-point merge (see bench.py
-synthetic_frontier + select_batch(exact_global_order=False)).
+synthetic_frontier + the bulk claim, per_host_topk over the eligible rows).
 
 ## Extrapolation to 10^10 URLs
 

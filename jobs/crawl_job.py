@@ -49,6 +49,9 @@ def main() -> None:
         SparkSession.builder.appName("sosse-spark-crawl")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
+        # above one round's ~200 generated classes: the default cache of
+        # 100 recompiles most of them every round
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

@@ -36,7 +36,6 @@ from pyspark.sql import types as T
 __all__ = [
     "FRONTIER_SCHEMA",
     "BLOOM_SCHEMA",
-    "frontier_row_defaults",
     "with_bucket",
     "bloom_build",
     "bloom_prefilter",
@@ -95,30 +94,6 @@ BLOOM_SCHEMA = "bucket int, word_no bigint, word bigint"
 # positions was set at build time — no false negatives, marginally more
 # FPs).
 _BLOOM_K = 5
-
-
-def frontier_row_defaults() -> dict:
-    return {
-        "crawl_first": None,
-        "crawl_last": None,
-        "crawl_next": None,
-        "crawl_dt": None,
-        "crawl_recurse": 0,
-        "manual_crawl": False,
-        "retries": 0,
-        "worker_no": None,
-        "error": None,
-        "error_hash": None,
-        "robotstxt_rejected": False,
-        "redirect_url": None,
-        "content_hash": None,
-        "max_age": None,
-        "modified_date": None,
-        "payload_date": None,
-        "tags": None,
-        "lineage_round": None,
-        "lineage_part": None,
-    }
 
 
 def with_bucket(df: DataFrame, n_buckets: int, url_col: str = "url") -> DataFrame:

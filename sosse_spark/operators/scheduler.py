@@ -102,59 +102,34 @@ def select_batch(
     per_host_budget: int = 4,
     crash_retry: int = 1,
     salt_buckets: int = 8,
-    exact_global_order: bool = True,
-    thin_rank: bool | None = None,
 ) -> DataFrame:
     """One round's claim: eligible → per-host budget → global top-N.
 
-    exact_global_order=True applies the reference's total queue order as
-    a hard batch_size cut via orderBy().limit() — exact, but the limit
-    merge is a single point: right for operational batch sizes (10^4-10^5).
-    At bulk-crawl scale the POLITENESS BUDGET is the real limiter; pass
-    exact_global_order=False to claim every budgeted row (callers size
-    per_host_budget × live-host-count to the round target) and keep the
-    plan fully parallel — no global merge.
+    The politeness windows rank only the thin (id, url_domain, priority)
+    projection, salted by `id`, and the reference's total queue order
+    cuts the survivors to `batch_size` (orderBy().limit()).  The claimed
+    ids then map back to full eligible rows through a broadcast hash
+    join bounded by batch_size, so the frontier's wide payload (url,
+    error text, cache fields, tags …) never rides a shuffle.  Salting by
+    `id` instead of `url` is rank-neutral: phase 1's per-(host, salt)
+    top-k is a superset of the true per-host top-k under ANY salt
+    assignment, and phase 2 exact-ranks the survivors.
 
-    thin_rank (default: on when exact_global_order bounds the claim and
-    `id` is a frontier column) runs the two politeness windows over ONLY
-    (id, url_domain, priority cols) — the frontier's wide payload (url,
-    error text, cache fields, tags …) never rides the window shuffles —
-    then maps the claimed ids back to full rows with a broadcast hash
-    join against the eligible slice (the frontier side is scanned, not
-    shuffled).  Salting by `id` instead of `url` is rank-neutral: phase
-    1's per-(host, salt) top-k is a superset of the true per-host top-k
-    under ANY salt assignment, and phase 2 exact-ranks the survivors.
-    The broadcast is bounded by batch_size, which is why the default
-    only engages under exact_global_order; bulk claims
-    (exact_global_order=False, claim = per_host_budget × live hosts,
-    measured slower under the broadcast's serial build at ~10^6+ keys)
-    keep the full-row windows unless the caller opts in."""
+    The rows come back UNORDERED, with their exact per-host `host_rank`;
+    a caller that needs the queue order ranks the ≤ batch_size rows by
+    priority_order_cols() itself.  A bulk claim with no global cut is
+    per_host_topk over the eligible rows."""
     eligible = frontier.filter(eligible_filter(now_col, crash_retry))
-    if thin_rank is None:
-        thin_rank = exact_global_order and "id" in frontier.columns
-    if not thin_rank:
-        budgeted = per_host_topk(
-            eligible, "url_domain", priority_order_cols(), per_host_budget, salt_buckets
-        )
-        if not exact_global_order:
-            return budgeted
-        return budgeted.orderBy(*priority_order_cols()).limit(batch_size)
-
     thin = eligible.select("id", "url_domain", "manual_crawl", "crawl_last", "crawl_next")
-    keys = per_host_topk(
-        thin, "url_domain", priority_order_cols(), per_host_budget, salt_buckets,
-        salt_key="id",
+    keys = (
+        per_host_topk(
+            thin, "url_domain", priority_order_cols(), per_host_budget, salt_buckets,
+            salt_key="id",
+        )
+        .orderBy(*priority_order_cols())
+        .limit(batch_size)
     )
-    if exact_global_order:
-        keys = keys.orderBy(*priority_order_cols()).limit(batch_size)
-    claimed = eligible.join(
-        F.broadcast(keys.select("id", "host_rank")), "id", "inner"
-    )
-    if exact_global_order:
-        # re-establish the queue order the pre-thin path returned (the
-        # join is order-destroying; the sort runs over ≤ batch_size rows)
-        claimed = claimed.orderBy(*priority_order_cols())
-    return claimed
+    return eligible.join(F.broadcast(keys.select("id", "host_rank")), "id", "inner")
 
 
 def display_queue(frontier: DataFrame, now_col: Column, size: int = 10, crash_retry: int = 1) -> DataFrame:

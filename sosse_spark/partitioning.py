@@ -3,6 +3,7 @@ from the cluster, never a constant tuned to one machine)."""
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 # Logical operators whose presence means the frame already crossed (or
@@ -72,6 +73,8 @@ def fanout(df: DataFrame) -> DataFrame:
             return df
         if _already_parallel(df):
             return df
-    except Exception:
+    except Py4JError:
+        # the JVM could not report plan stats: skip the fan-out (rows
+        # are unchanged either way); a Python-side error still raises
         return df
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)

@@ -57,6 +57,7 @@ from sosse_spark.operators.frontier import (
     bloom_build,
     merge_frontier,
     urlseen_dedup,
+    with_bucket,
 )
 from sosse_spark.operators.recrawl import schedule_next_cols
 from sosse_spark.operators.robots import evaluate_robots
@@ -247,8 +248,9 @@ class CrawlEngine:
     @staticmethod
     def _finalize_rows(df: DataFrame, **values) -> DataFrame:
         """Project onto FRONTIER_SCHEMA (its columns, order and types) in
-        ONE select: a column named in `values` takes that expression, a
-        nullable column `df` lacks is NULL.  One projection instead of a
+        ONE select: a column named in `values` takes that expression, any
+        other column `df` has passes through, a nullable one it lacks is
+        NULL.  One projection instead of a
         withColumn chain — each withColumn re-analyzes the whole (deep,
         per-round) plan."""
         have = set(df.columns)
@@ -264,6 +266,18 @@ class CrawlEngine:
                 raise ValueError(f"frontier rows lack the non-nullable column {f.name!r}")
             cols.append(c.cast(f.dataType).alias(f.name))
         return df.select(*cols)
+
+    def _with_url_keys(self, df: DataFrame) -> DataFrame:
+        """The frontier key columns a url derives: url_hash and bucket
+        (frontier.with_bucket), url_domain, url_path and this
+        collection's id."""
+        return with_bucket(df, self.n_buckets).withColumns(
+            {
+                "url_domain": F.parse_url("url", F.lit("HOST")),
+                "url_path": F.parse_url("url", F.lit("PATH")),
+                "collection_id": F.lit(self.policy.collection_id),
+            }
+        )
 
     def _id_parts(self) -> int:
         """assign_ids' range-partition count: the session's shuffle
@@ -287,13 +301,8 @@ class CrawlEngine:
         self._repair()  # adopt persisted n_buckets before bucketing seeds
         rows = [(sanitize_url(u), i) for i, u in enumerate(urls)]
         df = self.spark.createDataFrame(rows, "url string, disc_order long")
-        df = (
-            df.withColumn("url_hash", F.xxhash64("url"))
-            .withColumn("bucket", F.pmod(F.col("url_hash"), F.lit(self.n_buckets)).cast("int"))
-            .withColumn("url_domain", F.parse_url("url", F.lit("HOST")))
-            .withColumn("url_path", F.parse_url("url", F.lit("PATH")))
-            .withColumn("collection_id", F.lit(self.policy.collection_id))
-            .withColumn("crawl_recurse", F.lit(self.policy.recursion_depth))
+        df = self._with_url_keys(df).withColumn(
+            "crawl_recurse", F.lit(self.policy.recursion_depth)
         )
         existing = self._with_schema_defaults(self.frontier.read(self.spark))
         prev_bloom = self._read_bloom(existing)
@@ -424,7 +433,8 @@ class CrawlEngine:
             self.salt_buckets,
         )
         # global_rank: deterministic intra-round order (window over the
-        # already-limited batch — at most batch_size rows)
+        # already-limited batch — at most batch_size rows); select_batch
+        # returns its claim unordered, so this is the claim's one sort
         batch = batch.withColumn(
             "global_rank", F.row_number().over(Window.orderBy(*priority_order_cols()))
         ).cache()
@@ -559,75 +569,50 @@ class CrawlEngine:
             crawl_dt=F.col("b.crawl_dt"),
         )
 
-        replacements = joined.select(
-            F.col("url"),
-            F.col("b.url_hash").alias("url_hash"),
-            F.col("b.bucket").alias("bucket"),
-            F.col("b.url_domain").alias("url_domain"),
-            F.col("b.url_path").alias("url_path"),
-            F.col("b.collection_id").alias("collection_id"),
-            F.col("b.id").alias("id"),
-            F.coalesce(F.col("b.crawl_first"), now_col).alias("crawl_first"),
-            now_col.alias("crawl_last"),
-            nxt.alias("crawl_next"),
-            dt.alias("crawl_dt"),
-            F.col("b.crawl_recurse").alias("crawl_recurse"),
-            F.col("b.manual_crawl").alias("manual_crawl"),
+        # claimed rows after this round: each arm states only the columns
+        # it changes, the rest pass through _finalize_rows unchanged:
+        # tags persist through recrawl untouched (se/test_crawl.py:
+        # 803-820), and worker_no is NULL on every row the eligibility
+        # filter let select_batch claim
+        replacements = self._finalize_rows(
+            joined,
+            crawl_first=F.coalesce(F.col("b.crawl_first"), now_col),
+            crawl_last=now_col,
+            crawl_next=nxt,
+            crawl_dt=dt,
             # claim increments retries; success and generic error reset to 0,
             # skip keeps the increment (se/document.py:742, :524, :817)
-            F.when(is_skip, F.col("b.retries") + 1)
-            .otherwise(F.lit(0))
-            .cast("int")
-            .alias("retries"),
-            F.lit(None).cast("int").alias("worker_no"),
-            F.col("f.error").alias("error"),
-            F.when(is_error, F.md5(F.col("f.error"))).alias("error_hash"),
-            F.lit(False).alias("robotstxt_rejected"),
-            F.when(is_redirect, F.col("f.final_url")).alias("redirect_url"),
-            F.when(is_success, new_hash).otherwise(F.col("b.content_hash")).alias("content_hash"),
+            retries=F.when(is_skip, F.col("b.retries") + 1).otherwise(F.lit(0)),
+            error=F.col("f.error"),
+            error_hash=F.when(is_error, F.md5(F.col("f.error"))),
+            robotstxt_rejected=F.lit(False),
+            redirect_url=F.when(is_redirect, F.col("f.final_url")),
+            content_hash=F.when(is_success, new_hash).otherwise(F.col("b.content_hash")),
             # P12/F27 cache bookkeeping: server max-age refreshed on
             # success; modified_date bumps only when content changed
             # (se/document.py:456-457)
-            F.when(is_success, F.col("f.max_age")).otherwise(F.col("b.max_age")).alias("max_age"),
-            F.when(is_success & changed_content, now_col)
-            .otherwise(F.col("b.modified_date"))
-            .alias("modified_date"),
-            F.when(is_success, now_col).otherwise(F.col("b.payload_date")).alias("payload_date"),
-            # tags persist through recrawl untouched (se/test_crawl.py:803-820)
-            F.col("b.tags").alias("tags"),
-            F.lit(round_no).alias("lineage_round"),
-            F.col("b.bucket").alias("lineage_part"),
+            max_age=F.when(is_success, F.col("f.max_age")).otherwise(F.col("b.max_age")),
+            modified_date=F.when(is_success & changed_content, now_col).otherwise(
+                F.col("b.modified_date")
+            ),
+            payload_date=F.when(is_success, now_col).otherwise(F.col("b.payload_date")),
+            lineage_round=F.lit(round_no),
+            lineage_part=F.col("b.bucket"),
         )
-
-        rejected_rows = rejected.select(
-            F.col("url"),
-            "url_hash",
-            "bucket",
-            "url_domain",
-            "url_path",
-            "collection_id",
-            "id",
-            F.coalesce(F.col("crawl_first"), now_col).alias("crawl_first"),
-            now_col.alias("crawl_last"),
-            F.lit(None).cast("timestamp").alias("crawl_next"),
-            F.lit(None).cast("long").alias("crawl_dt"),
-            "crawl_recurse",
-            "manual_crawl",
-            F.lit(0).alias("retries"),
-            F.lit(None).cast("int").alias("worker_no"),
-            F.lit(None).cast("string").alias("error"),
-            F.lit(None).cast("string").alias("error_hash"),
-            F.lit(True).alias("robotstxt_rejected"),
-            F.lit(None).cast("string").alias("redirect_url"),
-            "content_hash",
-            "max_age",
-            "modified_date",
-            "payload_date",
-            "tags",
-            F.lit(round_no).alias("lineage_round"),
-            F.col("bucket").alias("lineage_part"),
+        rejected_rows = self._finalize_rows(
+            rejected,
+            crawl_first=F.coalesce(F.col("crawl_first"), now_col),
+            crawl_last=now_col,
+            crawl_next=F.lit(None),
+            crawl_dt=F.lit(None),
+            retries=F.lit(0),
+            error=F.lit(None),
+            error_hash=F.lit(None),
+            robotstxt_rejected=F.lit(True),
+            redirect_url=F.lit(None),
+            lineage_round=F.lit(round_no),
+            lineage_part=F.col("bucket"),
         )
-
         # cache-fresh rows: no fetch happened; reschedule as unchanged
         nxt_c, dt_c = schedule_next_cols(
             F.lit(False),
@@ -637,33 +622,18 @@ class CrawlEngine:
             crawl_last=now_col,
             crawl_dt=F.col("crawl_dt"),
         )
-        cache_rows = cache_hits.select(
-            "url",
-            "url_hash",
-            "bucket",
-            "url_domain",
-            "url_path",
-            "collection_id",
-            "id",
-            F.coalesce(F.col("crawl_first"), now_col).alias("crawl_first"),
-            now_col.alias("crawl_last"),
-            nxt_c.alias("crawl_next"),
-            dt_c.alias("crawl_dt"),
-            "crawl_recurse",
-            "manual_crawl",
-            F.lit(0).alias("retries"),
-            F.lit(None).cast("int").alias("worker_no"),
-            F.lit(None).cast("string").alias("error"),
-            F.lit(None).cast("string").alias("error_hash"),
-            F.lit(False).alias("robotstxt_rejected"),
-            "redirect_url",
-            "content_hash",
-            "max_age",
-            "modified_date",
-            "payload_date",
-            "tags",
-            F.lit(round_no).alias("lineage_round"),
-            F.col("bucket").alias("lineage_part"),
+        cache_rows = self._finalize_rows(
+            cache_hits,
+            crawl_first=F.coalesce(F.col("crawl_first"), now_col),
+            crawl_last=now_col,
+            crawl_next=nxt_c,
+            crawl_dt=dt_c,
+            retries=F.lit(0),
+            error=F.lit(None),
+            error_hash=F.lit(None),
+            robotstxt_rejected=F.lit(False),
+            lineage_round=F.lit(round_no),
+            lineage_part=F.col("bucket"),
         )
         # localCheckpoint (not cache): the round's commit plans otherwise
         # drag the ENTIRE round DAG — window + fetch kernel + robots join
@@ -676,9 +646,8 @@ class CrawlEngine:
         # difference between a constant-size driver plan per round and a
         # driver that melts down stringifying/analyzing megaplans.
         replacements = (
-            self._finalize_rows(replacements)
-            .unionByName(self._finalize_rows(rejected_rows))
-            .unionByName(self._finalize_rows(cache_rows))
+            replacements.unionByName(rejected_rows)
+            .unionByName(cache_rows)
             .localCheckpoint(eager=True)
         )
         lineage_cuts.append(replacements)
@@ -771,31 +740,18 @@ class CrawlEngine:
         lineage_cuts.append(resolved)
 
         admitted = admit_links(resolved, self.policy)
-        candidates = (
-            admitted.withColumn("url_hash", F.xxhash64("url"))
-            .withColumn("bucket", F.pmod(F.col("url_hash"), F.lit(self.n_buckets)).cast("int"))
-            .withColumn("url_domain", F.parse_url("url", F.lit("HOST")))
-            .withColumn("url_path", F.parse_url("url", F.lit("PATH")))
-            .withColumn("collection_id", F.lit(self.policy.collection_id))
-            .withColumn(
-                "disc_order",
-                (F.col("parent_rank").cast("long") * 4096 + F.col("link_no")).cast("long"),
-            )
+        candidates = self._with_url_keys(admitted).withColumn(
+            "disc_order",
+            (F.col("parent_rank").cast("long") * 4096 + F.col("link_no")).cast("long"),
         )
         # redirect targets are queued for the next round (BSP analog of
         # pick_or_create continuation, se/document.py:924-946)
-        redirect_targets = (
-            joined.filter(is_redirect)
-            .select(
+        redirect_targets = self._with_url_keys(
+            joined.filter(is_redirect).select(
                 F.col("f.final_url").alias("url"),
                 F.col("b.crawl_recurse").alias("crawl_recurse"),
                 (F.col("b.global_rank").cast("long") * 4096 + 4095).alias("disc_order"),
             )
-            .withColumn("url_hash", F.xxhash64("url"))
-            .withColumn("bucket", F.pmod(F.col("url_hash"), F.lit(self.n_buckets)).cast("int"))
-            .withColumn("url_domain", F.parse_url("url", F.lit("HOST")))
-            .withColumn("url_path", F.parse_url("url", F.lit("PATH")))
-            .withColumn("collection_id", F.lit(self.policy.collection_id))
         )
         cand_cols = [
             "url",

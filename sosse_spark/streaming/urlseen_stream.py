@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from sosse_spark.operators.frontier import with_bucket
+
 __all__ = ["streaming_urlseen", "URLSEEN_STATE_SCHEMA"]
 
 _LEGACY = "\x00legacy"  # marks buckets upgraded from hash-only state
@@ -119,8 +121,8 @@ def streaming_urlseen(urls: DataFrame, n_buckets: int = 16) -> DataFrame:
     first-ever occurrence of each exact (url, collection_id) pair
     across ALL micro-batches (state-store backed, restart-safe).
 
-    bucket/url_hash are derived here exactly as the batch engine
-    derives them — pmod(xxhash64(url), n_buckets) — so the emitted
+    bucket/url_hash come from frontier.with_bucket, the batch engine's
+    own rule — pmod(xxhash64(url), n_buckets) — so the emitted
     bucket column lines up with the frontier's bucket-granular commit
     when the caller passes the engine's n_buckets (default 16, the
     CrawlEngine default).
@@ -133,10 +135,8 @@ def streaming_urlseen(urls: DataFrame, n_buckets: int = 16) -> DataFrame:
     semantics for their old keys (see _dedupe_kernel); if the store
     rejects the schema change, start a fresh checkpoint directory.
     """
-    keyed = (
-        urls.withColumn("url_hash", F.xxhash64("url"))
-        .withColumn("bucket", F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int"))
-        .withColumn("pair_hash", F.xxhash64("url", "collection_id"))
+    keyed = with_bucket(urls, n_buckets).withColumn(
+        "pair_hash", F.xxhash64("url", "collection_id")
     )
     return keyed.groupBy("bucket").applyInPandasWithState(
         _dedupe_kernel,

@@ -49,6 +49,11 @@ def spark():
         # the driver thread sat in TreeNode.generateTreeString).  The
         # truncation only affects debug strings, never semantics.
         .config("spark.sql.maxPlanStringLength", "4096")
+        # a steady-state crawl round needs ~200 distinct generated
+        # classes; the default codegen cache (100 entries, static
+        # setting) evicts them every round and janino recompiles ~185
+        # byte-identical classes per round
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.local.dir", tempfile.gettempdir())
         .getOrCreate()
     )
